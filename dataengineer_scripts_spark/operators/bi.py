@@ -21,11 +21,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..registry import register
 from ..session_cache import session_shared as _session_shared
-from ..tables import table
+from ..tables import local_frame, table
 
 
 @register(
@@ -1124,7 +1123,6 @@ def x_graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     # placeholder works because every downstream frame is empty too
     _first = nodes.first()
     n_nodes = _first["n"] if _first is not None else 1
-    import pandas as pd
 
     # nodes.first() above already materialized every fact-sized ancestor
     # (the _brand_e0 / edges / nodes checkpoints) under the session
@@ -1138,12 +1136,6 @@ def x_graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     # raises loop_parts right back and keeps AQE on.  Same-session A/B
     # at sf0.1 (35 iterations): 6.1-9.8 s -> ~5.5 s loop wall.
     r = nodes.select("brand", (1.0 / F.col("n")).alias("r")).localCheckpoint()
-    rank_schema = T.StructType(
-        [
-            T.StructField("brand", T.StringType()),
-            T.StructField("r", T.DoubleType()),
-        ]
-    )
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     loop_confs = {
         "spark.sql.shuffle.partitions": str(
@@ -1164,15 +1156,14 @@ def x_graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
             # ONE job per block: endpoint ranks and per-node movement
             # come back in the same collect; the delta max and the next
             # block's rank frame are derived driver-side from the
-            # node-grain rows.  The rebuild goes through Arrow
-            # (createDataFrame of a pandas frame), which lands as
-            # JVM-resident batches — rebuilding via parallelize()
-            # instead re-pickles rows through a Python worker on EVERY
-            # step's broadcast build and measured 1.2-2.3 s SLOWER than
-            # the eager-checkpoint form it replaces; float64 survives
-            # collect -> pandas -> Arrow exactly, so ranks stay
-            # bit-identical (asserted against the checkpointed form at
-            # sf0.1 during the A/B).
+            # node-grain rows.  The rebuild is a local_frame, which
+            # lands as JVM-resident Arrow batches — rebuilding via
+            # parallelize() instead re-pickles rows through a Python
+            # worker on EVERY step's broadcast build and measured
+            # 1.2-2.3 s SLOWER than the eager-checkpoint form it
+            # replaces; float64 survives collect -> Arrow exactly, so
+            # ranks stay bit-identical (asserted against the
+            # checkpointed form at sf0.1 during the A/B).
             block = (
                 new_r.join(
                     r.select("brand", F.col("r").alias("r_prev")), "brand"
@@ -1186,16 +1177,10 @@ def x_graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             iters += PAGERANK_CHECK_EVERY
             delta = max((row["d"] for row in block), default=None)
-            r = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "brand": [row["brand"] for row in block],
-                        "r": pd.Series(
-                            [row["r"] for row in block], dtype="float64"
-                        ),
-                    }
-                ),
-                schema=rank_schema,
+            r = local_frame(
+                spark,
+                [(row["brand"], row["r"]) for row in block],
+                "brand string, r double",
             )
             if delta is not None and delta < PAGERANK_EPS:
                 break

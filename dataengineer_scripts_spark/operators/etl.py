@@ -67,7 +67,7 @@ from ..sources.stub_api import (
     RESET_PATH,
     StubApi,
 )
-from ..tables import table
+from ..tables import local_frame, table
 from ..xlsx import read_xlsx
 from .health import HEALTH_ORACLE, health_report
 
@@ -165,7 +165,7 @@ def src_rest_auth(spark: SparkSession, sf_dir: str) -> DataFrame:
     with urllib.request.urlopen(req, timeout=10) as resp:
         doc = json.loads(resp.read())
     rows = [tuple(n.get(k) for k in NODE_FIELDS) for n in doc["data"]["nodes"]]
-    return spark.createDataFrame(rows, NODE_SCHEMA)
+    return local_frame(spark, rows, NODE_SCHEMA)
 
 
 @register(
@@ -357,7 +357,7 @@ def snk_excel_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     i.e. the driver OS timezone, NOT the Spark session timezone — and the
     sheet stores that wall-clock isoformat.  The companion therefore
     re-parses the string with ``datetime.fromisoformat`` and hands the
-    NAIVE datetime back to ``createDataFrame`` (``toInternal`` →
+    NAIVE datetime back to ``local_frame`` (``toInternal`` →
     ``time.mktime``, the exact OS-local inverse), never a JVM
     ``cast('timestamp')``, which would re-interpret the wall-clock under
     the UTC-pinned session zone and shift every instant on a non-UTC
@@ -370,7 +370,8 @@ def snk_excel_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         "summary_job.xlsx",
     )
     write_excel_styled(report, out)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         _workbook_records(read_xlsx(out)),
         "user_id bigint, last_ts timestamp, status string, "
         "error_note string, n_err bigint, fill string",

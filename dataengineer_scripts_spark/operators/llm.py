@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..session_cache import session_shared as _session_shared
-from ..tables import rebalanced, table
+from ..tables import local_frame, rebalanced, table
 
 # ---------------------------------------------------------------------------
 # Shared text helpers (word 3-gram shingles)
@@ -674,6 +674,9 @@ SIMHASH_BITS = 64
 SIMHASH_CHUNKS = 4
 SIMHASH_CHUNK_BITS = 16
 SIMHASH_MAX_HAMMING = SIMHASH_CHUNKS - 1
+#: Packed vote sums (``_simhash_sig``) stay carry-free below 2^31 tokens
+#: per document; a longer document fails rather than mis-sign.
+SIMHASH_MAX_DOC_TOKENS = (1 << 31) - 1
 
 
 def _simhash_sig(th: DataFrame, bits: int) -> DataFrame:
@@ -684,9 +687,10 @@ def _simhash_sig(th: DataFrame, bits: int) -> DataFrame:
     and k+bits/2 share one 64-bit sum (low/high 32-bit halves): the
     per-row term is ``((h>>k)&1) + (((h>>(k+half))&1) << 32)``, so the
     summed low half is exactly bit k's vote count and the high half bit
-    (k+half)'s — carry-free while a document has < 2^31 tokens (a
-    multi-billion-token single document; asserted nowhere because the
-    fixture and any real corpus sit orders of magnitude below).  Packing
+    (k+half)'s — carry-free while a document has < 2^31 tokens; past
+    ``SIMHASH_MAX_DOC_TOKENS`` the high half would overflow the signed
+    sum and the low half could carry into it, so such a document raises
+    instead of getting a silently wrong signature.  Packing
     halves the aggregation-state width and the map-side partial rows the
     shuffle carries (65 → 33 columns for the 64-bit op — guide §5/§2.3).
     The kernel is shared by the production xxhash64 op and its md5
@@ -723,7 +727,18 @@ def _simhash_sig(th: DataFrame, bits: int) -> DataFrame:
     sig_expr = bit(0)
     for k in range(1, bits):
         sig_expr = sig_expr.bitwiseOR(F.shiftleft(bit(k), k))
-    return votes.select("doc_id", sig_expr.alias("sig"), "n")
+    sig = F.when(
+        F.col("n") > SIMHASH_MAX_DOC_TOKENS,
+        F.raise_error(
+            F.format_string(
+                "simhash: document %d has %d tokens, over the packed-vote "
+                f"limit of {SIMHASH_MAX_DOC_TOKENS}",
+                "doc_id",
+                "n",
+            )
+        ),
+    ).otherwise(sig_expr)
+    return votes.select("doc_id", sig.alias("sig"), "n")
 
 
 @register(
@@ -1368,8 +1383,8 @@ def x_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         order = np.lexsort((np.arange(len(qsim)), -qsim))  # sim desc, cell asc
         for cell in order[:IVF_PROBES]:
             probe_rows.append((int(r.vec_id), int(cell), list(r.e)))
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, cell_id int, qe array<double>"
+    probes = local_frame(
+        spark, probe_rows, "query_id long, cell_id int, qe array<double>"
     )
     cand = assigned.join(F.broadcast(probes), "cell_id").filter(
         F.col("vec_id") != F.col("query_id")
@@ -1591,7 +1606,8 @@ def x_llm_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qmat = np.array([r.e for r in qrows])
     qkeys = band_keys(qmat)
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         [
             (int(r.vec_id), int(b), int(qkeys[i, b]), list(r.e))
             for i, r in enumerate(qrows)
@@ -1718,8 +1734,8 @@ def x_llm_ann_ivf_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         order = np.lexsort((np.arange(len(qsim)), -qsim))  # sim desc, cell asc
         for cell in order[:IVF_PROBES]:
             probe_rows.append((int(r.vec_id), int(cell), list(r.e)))
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, cell_id int, qe array<double>"
+    probes = local_frame(
+        spark, probe_rows, "query_id long, cell_id int, qe array<double>"
     )
     cand = assigned.join(F.broadcast(probes), "cell_id").filter(
         F.col("vec_id") != F.col("query_id")
@@ -1844,7 +1860,8 @@ def x_llm_ann_lsh_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     qrows = [r for r in model_rows if r.vec_id < KNN_N_QUERIES]
     qmat = np.array([r.e for r in qrows])
     qkeys = band_keys(qmat)
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         [
             (int(r.vec_id), int(b), int(qkeys[i, b]), list(r.e))
             for i, r in enumerate(qrows)
@@ -4960,7 +4977,7 @@ def x_llm_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         # corpus): the oracle's CTE chain is empty end to end, so the
         # merge step's answer is the empty recount — not an IndexError
         # on the driver (adversarial corpus probe, r17)
-        return spark.createDataFrame([], "pair string, freq bigint")
+        return local_frame(spark, [], "pair string, freq bigint")
     top1 = top_rows[0].pair
     merged = tok.select(
         F.replace(F.col("t"), F.lit(top1), F.expr("chr(1)")).alias("m")

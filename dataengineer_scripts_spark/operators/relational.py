@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..session_cache import session_shared as _session_shared
-from ..tables import table
+from ..tables import local_frame, table
 
 # ---------------------------------------------------------------------------
 # §2.2 Projections / filters / predicates
@@ -509,7 +509,8 @@ def x_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     a fact-fact range join at scale would bucketize the range key first
     (see streaming/llm modules for that pattern)."""
     p = table(spark, sf_dir, "part")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("budget", 0.0, 500.0), ("mid", 500.0, 1200.0),
          ("premium", 1200.0, 100000.0)],
         "band string, lo double, hi double",

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import table
+from ..tables import local_frame, table
 
 #: Rolling-anomaly geometry: trailing window size and the |z| flag bar.
 ZSCORE_WINDOW = 10
@@ -620,7 +620,7 @@ def x_ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    lags = spark.createDataFrame([(k,) for k in AUTOCORR_LAGS], "lag int")
+    lags = local_frame(spark, [(k,) for k in AUTOCORR_LAGS], "lag int")
     a = daily.select("day", F.col("rev_c").alias("xc"))
     b = daily.select(F.col("day").alias("bday"), F.col("rev_c").alias("yc"))
     lagged = (

@@ -12,6 +12,23 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Local parallelism, resolved once at import and read by both
+#: ``ENGINE_CONFS`` and ``builder()``: ``SPARK_GRAFT_CPUS`` when set,
+#: otherwise the CPUs this process may run on, so a small box is not
+#: sized as a 32-core one.
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` when set, otherwise a quarter of physical
+    memory (the JVM's own default heap share), at least 1g."""
+    if mem := os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return mem
+    with open("/proc/meminfo") as fh:
+        kib = int(next(ln for ln in fh if ln.startswith("MemTotal:")).split()[1])
+    return f"{max(1, kib // 4 // 2**20)}g"
+
+
 #: Confs that are safe (and wanted) on both local test runs and a real
 #: cluster.  Runtime-settable ones are also re-applied per-query by the
 #: registry so driver-owned sessions behave identically.
@@ -19,7 +36,7 @@ ENGINE_CONFS: dict[str, str] = {
     # Shuffle parallelism sized to local cores (not the 200 default) — also
     # applied to driver-owned sessions at query time; AQE coalesces below
     # this at runtime, and a real cluster would raise it to 2-3× total cores.
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.sql.shuffle.partitions": CPUS,
     # AQE: runtime coalescing of shuffle partitions + skew-join splitting.
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -48,12 +65,10 @@ ENGINE_CONFS: dict[str, str] = {
 
 
 def builder(app_name: str = "dataengineer_scripts_spark") -> SparkSession.Builder:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     b = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{CPUS}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         # ~90 registered queries compile thousands of generated classes in
         # one JVM; the 240 MB default code cache fills and HotSpot silently
         # stops JIT-compiling — codegen-heavy aggregates then run

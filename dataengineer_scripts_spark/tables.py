@@ -9,6 +9,7 @@ place for "optimization" is the query, not the scan helper.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -107,6 +108,39 @@ def rebalanced(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema_ddl: str
+) -> DataFrame:
+    """A driver-held frame from Python row tuples, loaded into the JVM as
+    Arrow batches — the package's one way to turn driver values into a
+    DataFrame.
+
+    ``createDataFrame`` on Python rows pickles the rows through a
+    Python worker process, and the first such job of a session pays the
+    worker daemon's start (about 2 s cold) for a handful of rows.  An
+    Arrow table typed from the DDL schema goes straight to the JVM, so no
+    worker starts and the lineage holds no ``PythonRDD``.
+
+    Values keep ``createDataFrame``'s meaning: top-level ``timestamp``
+    columns go through ``TimestampType.toInternal``, so a naive datetime
+    is OS-local wall time (``time.mktime``) exactly as in the row path,
+    and the Arrow column carries the resulting UTC instants."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = T.StructType.fromDDL(schema_ddl)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = []
+    for field, arrow_field, values in zip(schema.fields, arrow_schema, columns):
+        if isinstance(field.dataType, T.TimestampType):
+            values = [field.dataType.toInternal(v) for v in values]
+        arrays.append(pa.array(values, type=arrow_field.type))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), schema
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

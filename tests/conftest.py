@@ -17,7 +17,6 @@ SF_MED = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("tests")
     yield spark
     spark.stop()

@@ -179,6 +179,28 @@ def test_two_phase_raises_when_rounds_exhausted(spark, monkeypatch):
         llm._two_phase_components(nodes, edges)
 
 
+def test_simhash_packed_votes_fail_past_token_limit(spark, monkeypatch):
+    """A document past the packed-vote token limit must raise, not get a
+    carried (wrong) signature; documents at the limit still sign.  The
+    real limit is 2^31 tokens, so the test lowers it."""
+    import dataengineer_scripts_spark.operators.llm as llm
+
+    assert llm.SIMHASH_MAX_DOC_TOKENS == 2**31 - 1
+    monkeypatch.setattr(llm, "SIMHASH_MAX_DOC_TOKENS", 3)
+    at_limit = spark.createDataFrame(
+        [(0, -1), (0, -1), (0, 0), (1, 5)], "doc_id long, h long"
+    )
+    assert {r.doc_id: r.sig for r in llm._simhash_sig(at_limit, 64).collect()} == {
+        0: -1,
+        1: 5,
+    }
+    over = spark.createDataFrame(
+        [(7, 1)] * 4 + [(8, 2)], "doc_id long, h long"
+    )
+    with pytest.raises(Exception, match="document 7 has 4 tokens"):
+        llm._simhash_sig(over, 64).collect()
+
+
 def test_knn_query_broadcast_is_cached_and_superseded(spark):
     import dataengineer_scripts_spark.operators.llm as llm
 

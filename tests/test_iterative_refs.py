@@ -8,6 +8,7 @@ implementation)."""
 from __future__ import annotations
 
 import math
+import re
 
 import pandas as pd
 
@@ -107,15 +108,25 @@ def test_pagerank_converged_matches_pure_python_fixpoint(spark, sf_dir):
         )
 
 
+def _scala_iter(coll):
+    it = coll.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
 def test_pagerank_converged_loop_job_budget(spark, sf_dir):
-    """The convergence loop must stay on its single-collect-per-block job
-    diet (r20): endpoint ranks and the delta probe ride ONE scheduled job
-    per block (plus the per-step broadcast builds of steps 2..5 — four
-    more — and the scoped-conf overhead-free LocalTableScan rebuild).
-    The r19 shape (eager block checkpoint + separate probe job, AQE
-    re-optimizing every node-grain stage) measured ~17 jobs/block; this
-    pins the budget at 9/block so a regression to the two-job-per-block
-    form fails loudly while leaving slack for scheduler jitter."""
+    """The convergence loop must run ONE collect per 5-iteration block:
+    endpoint ranks and the delta probe ride the same query, and the
+    next block's ranks are rebuilt on the driver as a local frame that
+    schedules no job of its own.  Counted structurally, by SQL
+    execution: every job of a block's collect (the result job plus the
+    per-step broadcast builds it triggers) carries the ``collect at
+    …bi.py`` call site, and those jobs must fall into exactly one
+    execution per block.  Outside the blocks only the loop's fixed
+    set-up — the node-count ``first`` and the initial rank
+    ``localCheckpoint`` — may schedule jobs, so anything that adds work
+    per block (a second probe, an eager block checkpoint, a rebuild that
+    runs a job) fails here."""
     from dataengineer_scripts_spark.operators.bi import _pagerank_graph
 
     # materialize the session-shared graph OUTSIDE the counted group
@@ -130,9 +141,33 @@ def test_pagerank_converged_loop_job_budget(spark, sf_dir):
         rows = out.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     n_blocks = max(1, rows[0]["n_iters"] // PAGERANK_CHECK_EVERY)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert n_jobs <= 9 * n_blocks + 6, (n_jobs, n_blocks)
+
+    tracker = sc.statusTracker()
+    group_jobs = set(tracker.getJobIdsForGroup(group))
+
+    def call_site(job_id):  # the result stage is the job's last-created one
+        return tracker.getStageInfo(max(tracker.getJobInfo(job_id).stageIds)).name
+
+    names = {j: call_site(j) for j in group_jobs}
+    block_jobs = {
+        j for j, name in names.items() if re.fullmatch(r"collect at .*bi\.py:\d+", name)
+    }
+    store = spark._jsparkSession.sharedState().statusStore()
+    block_executions = {
+        e.executionId()
+        for e in _scala_iter(store.executionsList())
+        if block_jobs & set(_scala_iter(e.jobs().keySet()))
+    }
+    assert len(block_executions) == n_blocks, (block_executions, n_blocks)
+    # this test's own collect of the result is not part of the loop
+    setup = {
+        j: name
+        for j, name in names.items()
+        if j not in block_jobs and "test_iterative_refs.py" not in name
+    }
+    assert len(setup) <= 2, setup
 
 
 def test_survival_km_matches_pandas_reference(spark, sf_dir):

@@ -62,7 +62,6 @@ HEADLINERS = [
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     from contextlib import redirect_stdout
     from io import StringIO
 

@@ -17,7 +17,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> int:
     outdir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     from dataengineer_scripts_spark import registry
     from dataengineer_scripts_spark.session import get_spark
 
