@@ -1072,7 +1072,7 @@ PAGERANK_CHECK_EVERY = 5
     "x_graph_pagerank_converged",  # unbounded iteration → rows-only
     why_no_oracle="unbounded fixpoint loop has no finite SQL unrolling",
     gate="shares `_pagerank_step` verbatim with the oracle-attested unrolled "
-         "`x_graph_pagerank` ({grade:x_graph_pagerank}); checked "
+         "`x_graph_pagerank`; checked "
          "point-for-point against a pure-Python fixpoint loop in "
          "`tests/test_iterative_refs.py`",
 )

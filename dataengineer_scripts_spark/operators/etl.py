@@ -299,7 +299,7 @@ def snk_json_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "snk_excel_styled",  # presentation artifact → rows-only
     why_no_oracle="the subject is a styled binary artifact",
-    gate="hash-matched companion `snk_excel_values` ({grade:snk_excel_values}) "
+    gate="hash-matched companion `snk_excel_values` "
          "re-reads the written workbook BYTES and drives every cell value + "
          "per-status fill through the oracle",
 )

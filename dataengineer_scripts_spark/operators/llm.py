@@ -745,7 +745,7 @@ def _simhash_sig(th: DataFrame, bits: int) -> DataFrame:
     "x_llm_dedup_simhash",  # xxhash64-derived → no cross-engine oracle
     why_no_oracle="xxhash64 has no DuckDB twin",
     gate="hash-matched md5-60-bit companion `x_llm_simhash_signature` "
-         "({grade:x_llm_simhash_signature}) attests the banding/Hamming "
+         "attests the banding/Hamming "
          "math end-to-end",
 )
 def x_llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1321,8 +1321,8 @@ IVF_PROBES = 3
 @register(
     "x_llm_ann_ivf",  # approximate by construction → rows-only check
     why_no_oracle="recall < 1 by design (IVF probe subset)",
-    gate="hash-matched exact-score companion `x_llm_ann_ivf_scores` "
-         "({grade:x_llm_ann_ivf_scores}); recall floor vs exact kNN in "
+    gate="hash-matched exact-score companion `x_llm_ann_ivf_scores`; "
+         "recall floor vs exact kNN in "
          "`tests/test_ann_recall.py`",
 )
 def x_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1550,8 +1550,7 @@ LSH_SEED = 42
 @register(
     "x_llm_ann_lsh",  # approximate by construction → rows-only check
     why_no_oracle="recall < 1 by design (LSH bucket subset)",
-    gate="hash-matched companion `x_llm_ann_lsh_scores` "
-         "({grade:x_llm_ann_lsh_scores}); recall floor in "
+    gate="hash-matched companion `x_llm_ann_lsh_scores`; recall floor in "
          "`tests/test_ann_recall.py`",
 )
 def x_llm_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2113,12 +2112,10 @@ LABEL_SWEEP_SWITCH = 5
 #: semi/anti joins, so it only wins when sweep volume dominates — the r19
 #: A/B measured it 0.4-1.0 s SLOWER at fixture scale (thousands of nodes)
 #: and the technique is a pure win when the corpus dwarfs the dup set
-#: (billions of docs, millions of dup edges).  Env-overridable for
-#: production tuning; the default keeps every fixture SF on the plain
-#: path.  Both sides are pinned by tests/test_hardening.py.
-LABELPROP_INCIDENT_MIN_NODES = int(
-    os.environ.get("SPARK_GRAFT_LABELPROP_INCIDENT_MIN_NODES", "5000000")
-)
+#: (billions of docs, millions of dup edges).  The threshold keeps every
+#: fixture SF on the plain path.  Both sides are pinned by
+#: tests/test_hardening.py.
+LABELPROP_INCIDENT_MIN_NODES = 5_000_000
 #: Round valve for the large-star/small-star alternation itself: rounds
 #: grow O(log^2 n) worst-case (Kiveris et al. 2014), so 40 covers any
 #: component that fits in a cluster; exceeding it means a logic error,
@@ -4274,8 +4271,7 @@ def x_llm_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "x_llm_pq_adc_topk",  # approximate by design (recall<1) → rows-only
     why_no_oracle="ADC distances are approximate by construction",
-    gate="hash-matched companion `x_llm_pq_adc_scores` "
-         "({grade:x_llm_pq_adc_scores}); recall floor in "
+    gate="hash-matched companion `x_llm_pq_adc_scores`; recall floor in "
          "`tests/test_ann_recall.py`",
 )
 def x_llm_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

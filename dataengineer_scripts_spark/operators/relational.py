@@ -764,8 +764,8 @@ def x_agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "x_agg_approx_distinct",  # approx: engine-specific HLL → rows-only
     why_no_oracle="HLL++ estimate is engine-specific",
-    gate="exact twin `x_agg_count_distinct` ({grade:x_agg_count_distinct}, "
-         "identical grouping); rsd envelope gated in `tests/test_warehouse.py::"
+    gate="exact twin `x_agg_count_distinct` (identical grouping); "
+         "rsd envelope gated in `tests/test_warehouse.py::"
          "test_approx_distinct_within_rsd_envelope_of_exact_twin`",
 )
 def x_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1230,7 +1230,7 @@ APPROX_QUANTILE_ACCURACY = 10_000
     why_no_oracle="sketch quantiles are engine-specific",
     gate="rank-error envelope vs sorted exact values gated in "
          "`tests/test_warehouse.py::test_approx_quantile_within_rank_error` "
-         "(exact companion `x_agg_median` {grade:x_agg_median})",
+         "(exact companion `x_agg_median`)",
 )
 def x_agg_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate percentiles (p50/p90/p99 of extended price per return
@@ -1577,7 +1577,7 @@ HLL_LG_K = 12
     "x_agg_hll_merge",  # sketch estimate → rows-only (no DuckDB twin)
     why_no_oracle="sketch bytes are engine-specific",
     gate="hash-matched exact companion `x_agg_hll_merge_exact` "
-         "({grade:x_agg_hll_merge_exact}) on identical keys; error envelope "
+         "on identical keys; error envelope "
          "gated in `tests/test_warehouse.py::"
          "test_hll_merge_estimate_within_error_envelope`",
 )

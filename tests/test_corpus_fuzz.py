@@ -38,6 +38,7 @@ from __future__ import annotations
 import inspect
 import os
 import random
+import re
 
 import pytest
 
@@ -441,11 +442,15 @@ def test_corpus_suite_survives_adversarial_shape(spark, tmp_path, shape):
         name for name in CORPUS_IDS
         if mutated in (_transitive_tables(DEFS[name].fn) or set())
     ]
-    # a resolver regression must shrink coverage loudly, not silently
-    # (floors from the pin-time enrollment: 64 documents readers, 14
-    # embeddings readers among the 78 CORPUS_IDS)
-    assert len(enrolled) >= {"documents": 50, "embeddings": 12}[mutated], (
-        mutated, len(enrolled)
+    # a resolver regression must change coverage loudly, not silently:
+    # cross-check against the oracle SQL, which names the same table
+    # after FROM/JOIN independently of the Python resolver
+    by_sql = [
+        name for name in CORPUS_IDS
+        if re.search(rf"\b(?:FROM|JOIN)\s+{mutated}\b", DEFS[name].oracle, re.I)
+    ]
+    assert enrolled == by_sql, (
+        mutated, sorted(set(enrolled) ^ set(by_sql))
     )
     con = make_duck(sf)
     try:
