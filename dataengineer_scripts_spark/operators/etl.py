@@ -829,9 +829,8 @@ def x_etl_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform per-key expectation).  This is the measurement that DECIDES
     the mitigation — ``skew_x`` near 1 → plain hash partitioning is
     fine; tens → AQE skew-join handles it; thousands (one key owns a
-    task) → salt that key (``x_join_skew_salted``) or cap it
-    (``x_llm_dedup_ngram_jaccard``'s hot-shingle cap).  Run it before
-    shuffling 100 TB, not after the straggler task appears.
+    task) → salt that key (``x_join_skew_salted``).  Run it before a
+    large shuffle, not after the straggler task appears.
 
     Cost: one map-side-combined count per key, then a broadcast of the
     ONE-row total joined to the per-key counts, then a top-K heap —

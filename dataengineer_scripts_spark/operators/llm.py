@@ -203,9 +203,7 @@ def _exact_text_buckets(df: DataFrame, aggs: dict[str, Column]) -> DataFrame:
     )
 
 
-def _exact_text_groups(
-    df: DataFrame, aggs: dict[str, Column], *, broadcast_dups: bool = True
-) -> DataFrame:
+def _exact_text_groups(df: DataFrame, aggs: dict[str, Column]) -> DataFrame:
     """Per-identical-text groups of ``df`` (which must carry ``text`` plus
     every column the ``aggs`` consume) without ever shuffling text
     corpus-wide — the two-phase hash-keyed form the r12 verdict asked to
@@ -218,9 +216,8 @@ def _exact_text_groups(
       so a unique hash is a unique text) and pass through;
     - multi-member buckets re-read the text for their rows only (a
       broadcast semi join on the duplicate-hash set — tiny relative to
-      the corpus under any real duplicate rate; the web-scale fallback
-      is dropping the hint and letting AQE pick the side) and regroup
-      per ``(hash, text)``, so a 64-bit collision can never merge two
+      the corpus under any real duplicate rate) and regroup per
+      ``(hash, text)``, so a 64-bit collision can never merge two
       distinct texts.  Text bytes shuffled are proportional to the
       DUPLICATE rows, not the corpus (measured flat per doc at 1x/3x/10x
       — scale_stress_r13_exact.json).
@@ -231,23 +228,14 @@ def _exact_text_groups(
     while multi-member buckets recompute every aggregate from their raw
     rows.  Any aggregate (avg, sum, collect, …) is therefore correct
     here; no grouping-refinement-safety constraint applies (r13 ADVICE
-    item 1).
-
-    ``broadcast_dups=True`` (the default, right for any real duplicate
-    rate at fixture scale) plants a broadcast hint on the duplicate-hash
-    set; a web-scale caller facing a pathologically duplicate-heavy
-    corpus can pass ``False`` to drop the hint and let AQE pick the
-    join side instead of risking the broadcast ceiling (r13 ADVICE
-    item 2)."""
+    item 1)."""
     agg_cols = [c.alias(n) for n, c in aggs.items()]
     out = list(aggs)
     buckets = _exact_text_buckets(df, aggs).localCheckpoint()
     multi_h = buckets.filter(F.col("_n") > 1).select("h")
-    if broadcast_dups:
-        multi_h = F.broadcast(multi_h)
     dups = (
         df.withColumn("h", F.xxhash64("text"))
-        .join(multi_h, "h", "semi")
+        .join(F.broadcast(multi_h), "h", "semi")
         .groupBy("h", "text")
         .agg(*agg_cols)
         .select(*out)
@@ -280,35 +268,6 @@ def x_llm_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Hot-shingle cap for candidate generation: a shingle present in more than
-#: max(HOT_SHINGLE_MIN_DF, HOT_SHINGLE_FRACTION × corpus) documents is
-#: boilerplate — it carries ~no dedup signal but produces a quadratic
-#: candidate blowup on a single shuffle key.  The absolute floor keeps the
-#: cap inert on small fixtures (oracle equality holds); the fraction is the
-#: 100 TB lever.
-HOT_SHINGLE_MIN_DF = 100
-HOT_SHINGLE_FRACTION = 0.001
-
-
-def _hot_shingle_keys(sh: DataFrame, n_docs: DataFrame) -> DataFrame:
-    """The (few) shingles whose document frequency exceeds the cap.
-    ``n_docs`` is a 1-row frame with column ``n_docs`` (kept relational —
-    no driver-side count).  By construction this set is tiny (each member
-    appears in >0.1% of the corpus, so there are < 1000/0.1% of them) —
-    always broadcastable."""
-    cap = F.greatest(
-        F.lit(HOT_SHINGLE_MIN_DF),
-        F.ceil(F.lit(HOT_SHINGLE_FRACTION) * F.col("n_docs")),
-    )
-    return (
-        sh.groupBy("h")
-        .agg(F.count("*").alias("df"))
-        .join(F.broadcast(n_docs))
-        .filter(F.col("df") > cap)
-        .select("h")
-    )
-
-
 @register(
     "x_llm_dedup_ngram_jaccard",
     oracle=f"""
@@ -319,34 +278,17 @@ def _hot_shingle_keys(sh: DataFrame, n_docs: DataFrame) -> DataFrame:
 )
 def x_llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-gram Jaccard near-dup pairs (J >= 0.5) via an inverted-index
-    self-join on shingles: only docs sharing >= 1 shingle ever pair up
-    (zero-overlap pairs have J = 0 by definition) — never an n² cross join.
-    The common-shingle count is aggregated DIRECTLY off the self-join (one
-    shuffle on the pair key) — a distinct-candidates + re-join formulation
-    costs ~4× on the fixture.
+    self-join on shingles (:func:`_overlap_counts`): only docs sharing
+    >= 1 shingle ever pair up (zero-overlap pairs have J = 0 by
+    definition) — never an n² cross join.  The common-shingle count is
+    aggregated DIRECTLY off the self-join (one shuffle on the pair key) —
+    a distinct-candidates + re-join formulation costs ~4× on the fixture.
+    Output equals the exact all-pairs oracle.
 
-    Skew mitigation (the 100 TB lever): the self-join runs over COLD
-    shingles only — hot boilerplate shingles (document frequency above the
-    ``_hot_shingle_keys`` cap) are removed by a **broadcast anti-join**
-    (narrow, no extra shuffle) because one ubiquitous shingle would pile a
-    quadratic candidate set onto a single shuffle key.  Reported J values
-    stay EXACT: the hot shingles' contribution to each surviving pair's
-    common count is added back by a candidate-linear join against the hot
-    shingle rows (each doc holds few hot shingles), and sizes always count
-    the full shingle set.
-
-    Recall is ALSO exact, in two cases.  A pair invisible to the cold
-    self-join shares only hot shingles, so its intersection is at most
-    ``min(hot_a, hot_b)`` — for it to reach J ≥ 0.5 BOTH docs must be
-    template-dominated (cold shingles ≤ half their set).  Those docs are
-    routed through a completion pass: mostly-hot docs pair via their hot
-    shingle rows and get full-set Jaccard via ``_pair_jaccard``.  The
-    completion join's size is governed by the template-class sizes, and
-    every pair it emits is (near-)real output rather than skew waste —
-    exact template COPIES should still be collapsed by
-    ``x_llm_dedup_exact`` first at scale, since their pair set is
-    inherently quadratic in the class size.  On the fixture the cap is
-    inert and output equals the exact all-pairs oracle."""
+    Cost bound: a shingle shared by d documents adds d² join rows, so
+    boilerplate shingles and exact template copies grow the join
+    quadratically in their document frequency (collapse exact copies
+    with ``x_llm_dedup_exact`` first when that matters)."""
     return _jaccard_pairs_shared(spark, sf_dir)
 
 
@@ -359,100 +301,42 @@ def _jaccard_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "jaccard_pairs",
-        lambda: _ngram_jaccard_pairs(spark, sf_dir, _shingle_rows(spark, sf_dir)),
+        lambda: _ngram_jaccard_pairs(_shingle_rows(spark, sf_dir)),
     )
 
 
-def _overlap_counts(spark: SparkSession, sf_dir: str, sh: DataFrame):
-    """Skew-capped pairwise shingle-overlap machinery shared by the
-    Jaccard and containment operators: returns ``(common, sizes, cold,
-    hot_sh)`` where ``common`` is (doc_a < doc_b, c_cold, c_hot) for
-    every pair sharing >= 1 COLD shingle (exact overlap counts — the hot
-    contribution is added back candidate-linearly), ``sizes`` is the
-    FULL per-doc shingle count, and ``cold``/``hot_sh`` are the
-    cold/hot shingle row splits for the metric-specific completion
-    passes."""
-    n_docs = table(spark, sf_dir, "documents").agg(F.count("*").alias("n_docs"))
-    hot = _hot_shingle_keys(sh, n_docs)
-    cold = sh.join(F.broadcast(hot), "h", "left_anti")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))  # FULL sizes
-
-    a = cold.select(F.col("doc_id").alias("doc_a"), "h")
-    b = cold.select(F.col("doc_id").alias("doc_b"), "h")
-    cold_common = (
+def _overlap_counts(sh: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Pairwise shingle overlap shared by the Jaccard and containment
+    operators — the Spark form of ``_SQL_PAIR_JACCARD``'s ``common`` and
+    ``sizes``: returns ``(common, sizes)`` where ``common`` is
+    (doc_a < doc_b, c), one exact common-shingle count per pair sharing
+    >= 1 shingle, and ``sizes`` is the per-doc shingle count."""
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    a = sh.select(F.col("doc_id").alias("doc_a"), "h")
+    b = sh.select(F.col("doc_id").alias("doc_b"), "h")
+    common = (
         a.join(b, "h")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("c_cold"))
+        .agg(F.count("*").alias("c"))
     )
-
-    # Hot-shingle correction: per candidate pair, how many hot shingles both
-    # docs contain.  hot_sh is (doc, hot shingle) rows — candidate-linear
-    # (few hot shingles per doc), keyed by doc ids, never by the hot key.
-    hot_sh = sh.join(F.broadcast(hot), "h")
-    ah = hot_sh.select(F.col("doc_id").alias("doc_a"), "h")
-    bh = hot_sh.select(F.col("doc_id").alias("doc_b"), "h")
-    hot_common = (
-        cold_common.select("doc_a", "doc_b")
-        .join(ah, "doc_a")
-        .join(bh, ["doc_b", "h"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("c_hot"))
-    )
-    common = cold_common.join(hot_common, ["doc_a", "doc_b"], "left").withColumn(
-        "c_hot", F.coalesce("c_hot", F.lit(0))
-    )
-    return common, sizes, cold, hot_sh
+    return common, sizes
 
 
-def _ngram_jaccard_pairs(
-    spark: SparkSession, sf_dir: str, sh: DataFrame
-) -> DataFrame:
+def _ngram_jaccard_pairs(sh: DataFrame) -> DataFrame:
     """Body of :func:`x_llm_dedup_ngram_jaccard` over a caller-supplied
     shingle frame, so a pipeline that needs shingles for several stages
     (``flagship_curation``: pair-gen + decontamination) builds them ONCE
     and shares the materialized frame."""
-    common, sizes, cold, hot_sh = _overlap_counts(spark, sf_dir, sh)
-
-    c = F.col("c_cold") + F.col("c_hot")
+    common, sizes = _overlap_counts(sh)
+    c = F.col("c")
     j = c.cast("double") / ((F.col("sa.n") + F.col("sb.n") - c).cast("double"))
-    via_cold = (
+    return (
         common.join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
         .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
         .filter(j >= 0.5)
         .select("doc_a", "doc_b", F.round(j, 6).alias("jaccard"))
     )
-
-    # Completion pass (recall): pairs whose ENTIRE overlap is hot never met
-    # in the cold self-join, and can reach J >= 0.5 only when both docs are
-    # template-dominated (cold <= half the shingle set).  Pair exactly those
-    # docs through their hot shingle rows, drop pairs the cold route already
-    # produced, and compute full-set Jaccard candidate-linearly.  Empty
-    # whenever the cap is inert (no hot shingles -> no mostly-hot docs).
-    # qualifying count off the HOT rows (n_hot*2 >= n ⟺ n_cold*2 <= n):
-    # hot-row-sized instead of a corpus-sized cold-row aggregate, so the
-    # completion costs ~nothing when the cap is inert
-    hot_n = hot_sh.groupBy("doc_id").agg(F.count("*").alias("n_hot"))
-    mostly_hot_docs = (
-        sizes.join(hot_n, "doc_id")
-        .filter(F.col("n_hot") * 2 >= F.col("n"))
-        .select("doc_id")
-    )
-    mh_sh = hot_sh.join(mostly_hot_docs, "doc_id")
-    extra_pairs = (
-        mh_sh.select(F.col("doc_id").alias("doc_a"), "h")
-        .join(mh_sh.select(F.col("doc_id").alias("doc_b"), "h"), "h")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-        .join(common.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti")
-    )
-    via_hot = (
-        _pair_jaccard(extra_pairs, sh)
-        .filter(F.col("j") >= 0.5)
-        .select("doc_a", "doc_b", F.round("j", 6).alias("jaccard"))
-    )
-    return via_cold.unionByName(via_hot)
 
 
 #: Containment report floor: fraction of the inner doc's shingles that
@@ -489,24 +373,13 @@ def x_llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     containment measure): drop or down-weight the inner copy, keep the
     container.
 
-    Reuses the skew-capped overlap machinery (``_overlap_counts``):
-    exact common counts for every pair sharing a cold shingle, hot
-    contribution added back candidate-linearly, evaluated in BOTH
-    directions off one (doc_a < doc_b) frame — PLUS a completion pass
-    (mirroring the Jaccard sibling's via_hot route) so the operator
-    matches the exact all-pairs oracle even when the hot-shingle cap
-    activates: a pair invisible to the cold route shares ONLY hot
-    shingles, and its inner doc at C >= 0.8 must itself be >= 80% hot
-    shingles (every cold inner shingle is guaranteed non-overlap), so
-    exactly those mostly-hot docs are re-paired through the hot rows
-    against ALL hot-shingle holders, anti-joined against the cold
-    route's pairs, and scored with exact candidate-linear counts.  The
-    completion is near-output-sized (every template holder genuinely
-    contains the template) and empty whenever the cap is inert — which
-    it is on every fixture SF swept."""
-    sh = _shingle_rows(spark, sf_dir)
-    common, sizes, _cold, _hot_sh = _overlap_counts(spark, sf_dir, sh)
-    c = (F.col("c_cold") + F.col("c_hot")).cast("double")
+    Scored off the same exact inverted-index self-join as the Jaccard
+    sibling (:func:`_overlap_counts`), evaluated in BOTH directions off
+    one (doc_a < doc_b) frame; output equals the exact all-pairs oracle.
+    The same cost bound holds: a shingle shared by d documents adds d²
+    join rows."""
+    common, sizes = _overlap_counts(_shingle_rows(spark, sf_dir))
+    c = F.col("c").cast("double")
     with_sizes = common.join(
         sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id")
     ).join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
@@ -526,58 +399,7 @@ def x_llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(c / F.col("sb.n"), 6).alias("containment"),
         )
     )
-
-    # Completion pass: candidate inners are docs that can reach C >= T
-    # through hot shingles alone, i.e. n_hot >= T*n (equivalently
-    # n_cold <= (1-T)*n — counted off the HOT rows, not the cold rows,
-    # so the qualifying aggregate is hot-row-sized: near-empty when the
-    # cap is inert instead of a corpus-sized cold-row count); outers are
-    # any hot-shingle holders.  Anti-join removes pairs the cold route
-    # already scored.
-    hot_n = _hot_sh.groupBy("doc_id").agg(F.count("*").alias("n_hot"))
-    mostly_hot = (
-        sizes.join(hot_n, "doc_id")
-        .filter(
-            F.col("n_hot").cast("double") >= CONTAINMENT_THRESHOLD * F.col("n")
-        )
-        .select("doc_id")
-    )
-    inner_h = _hot_sh.join(mostly_hot, "doc_id").select(
-        F.col("doc_id").alias("doc_inner"), "h"
-    )
-    cand = (
-        inner_h.join(
-            _hot_sh.select(F.col("doc_id").alias("doc_outer"), "h"), "h"
-        )
-        .filter(F.col("doc_inner") != F.col("doc_outer"))
-        .select("doc_inner", "doc_outer")
-        .distinct()
-        .withColumn("_lo", F.least("doc_inner", "doc_outer"))
-        .withColumn("_hi", F.greatest("doc_inner", "doc_outer"))
-        .join(
-            common.select(
-                F.col("doc_a").alias("_lo"), F.col("doc_b").alias("_hi")
-            ),
-            ["_lo", "_hi"],
-            "left_anti",
-        )
-        .drop("_lo", "_hi")
-    )
-    si = sh.select(F.col("doc_id").alias("doc_inner"), "h")
-    so = sh.select(F.col("doc_id").alias("doc_outer"), "h")
-    cnt = (
-        cand.join(si, "doc_inner")
-        .join(so, ["doc_outer", "h"])
-        .groupBy("doc_inner", "doc_outer")
-        .agg(F.count("*").alias("c"))
-    )
-    ci = F.col("c").cast("double") / F.col("si.n").cast("double")
-    via_hot = (
-        cnt.join(sizes.alias("si"), F.col("doc_inner") == F.col("si.doc_id"))
-        .filter(ci >= CONTAINMENT_THRESHOLD)
-        .select("doc_inner", "doc_outer", F.round(ci, 6).alias("containment"))
-    )
-    return fwd.unionByName(rev).unionByName(via_hot)
+    return fwd.unionByName(rev)
 
 
 #: MinHash/LSH geometry: 128 hashes in 32 bands of 4 rows.  At the J=0.8
@@ -2106,16 +1928,6 @@ CLUSTER_J_THRESHOLD = 0.5
 #: diameter-independent algorithm, not more sweeps.
 LABEL_SWEEP_SWITCH = 5
 
-#: Node-count threshold above which the label-propagation sweeps restrict
-#: themselves to edge-incident nodes (singletons are provably final after
-#: one sweep).  The restriction pays one edge-distinct + two node-keyed
-#: semi/anti joins, so it only wins when sweep volume dominates — the r19
-#: A/B measured it 0.4-1.0 s SLOWER at fixture scale (thousands of nodes)
-#: and the technique is a pure win when the corpus dwarfs the dup set
-#: (billions of docs, millions of dup edges).  The threshold keeps every
-#: fixture SF on the plain path.  Both sides are pinned by
-#: tests/test_hardening.py.
-LABELPROP_INCIDENT_MIN_NODES = 5_000_000
 #: Round valve for the large-star/small-star alternation itself: rounds
 #: grow O(log^2 n) worst-case (Kiveris et al. 2014), so 40 covers any
 #: component that fits in a cluster; exceeding it means a logic error,
@@ -2303,7 +2115,6 @@ def _min_label_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
         "doc_id", F.col("doc_id").alias("cluster_id")
     ).localCheckpoint()
     changed = -1
-    rest = None  # non-incident labels, split off once the volume guard trips
     for _ in range(LABEL_SWEEP_SWITCH):
         nbr_min = (
             edges.join(labels, edges.src == labels.doc_id)
@@ -2328,32 +2139,12 @@ def _min_label_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
             .withColumnRenamed("new_cid", "cluster_id")
             .localCheckpoint()
         )
-        probe = new_labels.agg(
-            F.count("*").alias("n_labels"),
-            F.sum(F.col("_chg").cast("long")).alias("n_changed"),
-        ).collect()[0]
-        changed = int(probe["n_changed"] or 0)
+        changed = int(
+            new_labels.agg(F.sum(F.col("_chg").cast("long"))).collect()[0][0] or 0
+        )
         labels = new_labels.drop("_chg")
         if changed == 0:
             break
-        if rest is None and probe["n_labels"] >= LABELPROP_INCIDENT_MIN_NODES:
-            # Edge-incident restriction (guide §2.3 "shuffle fewer
-            # bytes"; the r19 attempt, re-landed behind this volume
-            # guard): a node with no edges never appears in nbr_min, so
-            # its label is final after sweep 1 — at LLM-dedup scale the
-            # corpus dwarfs the dup set and sweeping billions of
-            # singleton rows per sweep is the dominant waste.  The guard
-            # trips off the SAME probe row the convergence check already
-            # pays (zero extra jobs at fixture scale, where r19 measured
-            # the unconditional restriction 0.4-1.0 s SLOWER than the
-            # plain sweeps); once tripped, later sweeps carry only
-            # edge-incident labels and the untouched singleton labels
-            # re-attach lazily in the consumer's plan.
-            incident = edges.select(F.col("src").alias("doc_id")).distinct()
-            rest = labels.join(incident, "doc_id", "anti")
-            labels = labels.join(incident, "doc_id", "semi").localCheckpoint()
-    if changed == 0 and rest is not None:
-        labels = labels.unionByName(rest)
     if changed != 0:
         # Still moving after the sweep budget: the component is deeper
         # than any near-clique dup class — finish with the
@@ -2733,13 +2524,8 @@ def x_llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     side as a MAINTAINED index (shingle rows persisted bucketed by
     ``h`` as each batch is admitted), so the per-batch cost becomes one
     narrow scan of the batch + one co-located join, with the corpus
-    text never re-shingled.  The
-    hot-shingle cap of ``x_llm_dedup_ngram_jaccard`` applies unchanged
-    when boilerplate df crosses the cap (same anti-join + candidate-
-    linear correction, bipartite instead of self-join); the fixture df
-    stays below it, so this operator states the exact J directly.
-    Sizes count FULL shingle sets on both sides, so reported J is exact,
-    same as the batch operator.  Measured (r12 stress): 1.9x wall at 10x
+    text never re-shingled.  Sizes count FULL shingle sets on both
+    sides, so reported J is exact, same as the batch operator.  Measured (r12 stress): 1.9x wall at 10x
     corpus, matched batch docs exactly 10x —
     `scale_stress_r12_incremental.json`."""
     sh = _shingle_rows(spark, sf_dir)
@@ -3337,8 +3123,8 @@ def flagship_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays all seven stages (recursive CTE for the components)
     and the driver hash-matches the final manifest.  Each stage keeps
     the scale shape of its standalone operator: the only data-sized
-    shuffles are the shingle self-join (skew-capped), the components'
-    bounded sweeps, and the final per-lang window."""
+    shuffles are the shingle self-join, the components' bounded sweeps,
+    and the final per-lang window."""
     docs = table(spark, sf_dir, "documents")
     arr = F.filter(_tri_shingle_array(F.col("text")), lambda x: x.isNotNull())
     # try_divide: a sub-shingle doc (< 3 words) has NO rows in the
@@ -3840,8 +3626,9 @@ def x_llm_ngram_lm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     too big to broadcast, so the window is the cheaper plan wherever
     the successor distribution is non-degenerate.
 
-    Measured (r11, ``tools/ngram_window_bound.py`` — a synthetic bigram
-    table whose head word carries N successors, through this exact
+    Measured once (r11, by a one-off script since deleted — it is in
+    ``tools/`` at commit 6ed30ed — on a synthetic bigram table whose
+    head word carries N successors, through this exact
     window+projection shape): N=10^6 runs in ~1.3 s, a pathological
     N=10^7 in ~6.2 s.  The bound holds with an order of headroom over
     public web-corpus head sizes; the zipf two-level rank remains the
@@ -4102,8 +3889,8 @@ def x_llm_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: shingles collapse to DISTINCT (source, 64-bit hash) first —
     after that, per-shingle multiplicity is bounded by the number of
     sources (~tens), so the self-equi-join on the hash generates at most
-    sources² candidates per shingle, never the per-document blowup the
-    pair operators need a hot cap for.  The per-source totals table is
+    sources² candidates per shingle, never the per-document d² blowup
+    of the pair operators' self-join.  The per-source totals table is
     sources-sized and broadcast back onto the pair aggregate.  Everything
     shuffled is (long, short-string): the shingle text never leaves the
     map side."""
@@ -4535,9 +4322,9 @@ def x_llm_dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity holds at every SF).  The exact ``startswith`` check runs
     INSIDE the block join as a codegen'd residual.  Block sizes are
     bounded by template-class sizes once ``x_llm_dedup_exact`` has
-    collapsed identical texts — the same reasoning as the hot-shingle
-    cap, with the cap itself available if a pathological corpus needs it.
-    At 100 TB: one narrow projection, one equi-join on a 16-byte key."""
+    collapsed identical texts, the same bound as the pair operators'
+    shingle self-join.  One narrow projection, one equi-join on a
+    16-byte key."""
     d = table(spark, sf_dir, "documents").select(
         "doc_id",
         "text",

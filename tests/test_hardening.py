@@ -99,13 +99,10 @@ def test_components_auto_switch_on_adversarial_chain(spark):
     assert got == want
 
 
-def test_label_propagation_incident_guard_both_sides(spark, monkeypatch):
-    """The edge-incident sweep restriction (r20) must be label-identical
-    to the plain path: with the volume guard forced ON (threshold 1) the
-    sweeps carry only edge-incident nodes and singletons re-attach via
-    the split-off rest frame; with it OFF (default, fixture-scale) the
-    plain path runs.  The graph mixes a multi-sweep path component (so
-    sweeps continue AFTER the guard trips), a pair, and singletons."""
+def test_label_propagation_incident_guard_both_sides(spark):
+    """Min-label propagation over a graph that mixes a multi-sweep path
+    component, a pair, and singletons (nodes with no incident edge, which
+    every sweep carries and which must keep their own label)."""
     import dataengineer_scripts_spark.operators.llm as llm
 
     # path 0-1-2-3 (needs 3 sweeps), pair (10,11), singletons 20/21/22
@@ -116,16 +113,11 @@ def test_label_propagation_incident_guard_both_sides(spark, monkeypatch):
     )
     want = {0: 0, 1: 0, 2: 0, 3: 0, 10: 10, 11: 10, 20: 20, 21: 21, 22: 22}
 
-    plain = {
+    got = {
         r.doc_id: r.cluster_id
         for r in llm._min_label_components(nodes, pairs).collect()
     }
-    assert plain == want
-
-    monkeypatch.setattr(llm, "LABELPROP_INCIDENT_MIN_NODES", 1)
-    restricted_df = llm._min_label_components(nodes, pairs)
-    restricted = {r.doc_id: r.cluster_id for r in restricted_df.collect()}
-    assert restricted == want
+    assert got == want
 
 
 def test_two_phase_components_random_graph_matches_union_find(spark):

@@ -1,98 +1,78 @@
-"""The hot-shingle document-frequency cap: the candidate self-join must run
-over cold shingles only (pruning pairs whose sole overlap is boilerplate —
-the quadratic skew risk), while the hot-correction join keeps reported
-Jaccard values exact over the FULL shingle set."""
+"""Skewed corpora for the n-gram pair operators: one boilerplate shingle
+in almost every document, and a template copied across most of the
+corpus.  ``x_llm_dedup_ngram_jaccard`` and ``x_llm_dedup_containment``
+must equal their DuckDB oracles (the exact all-pairs answer) on both, so
+a shingle shared by many documents can neither drop a true pair nor
+distort a reported value."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import duckdb
 
+from dataengineer_scripts_spark import registry
 from dataengineer_scripts_spark.operators.llm import (
-    _hot_shingle_keys,
-    _shingle_rows,
+    x_llm_dedup_containment,
     x_llm_dedup_ngram_jaccard,
 )
-from dataengineer_scripts_spark.tables import table
+
+from .oracle_utils import assert_matches_oracle
+
+DEFS = registry.definitions()
+
+#: 152 docs share the boilerplate trigram "hot1 hot2 hot3"; docs 1/2 are
+#: exact dups that also share rare shingles.
+BOILERPLATE = [
+    (1, "r1 r2 r3 r4 hot1 hot2 hot3"),
+    (2, "r1 r2 r3 r4 hot1 hot2 hot3"),
+] + [(i, f"u{i}a u{i}b hot1 hot2 hot3") for i in range(10, 160)]
+
+#: 120 literal copies of a template whose every shingle they share, plus
+#: one doc that is only half template.
+TEMPLATE = [(i, "hot1 hot2 hot3 hot4 hot5") for i in range(120)] + [
+    (500, "c1 c2 c3 c4 hot1 hot2 hot3")
+]
 
 
-def _write_docs(spark, tmp_path, docs):
-    df = spark.createDataFrame(
+def _assert_oracles(spark, tmp_path, docs):
+    """Write ``docs`` as the documents table and check both operators
+    against their oracles over it; return the fixture dir."""
+    path = tmp_path / "documents.parquet"
+    spark.createDataFrame(
         [(i, t, "en", "src0", len(t)) for i, t in docs],
         "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    ).write.mode("overwrite").parquet(str(path))
+    with duckdb.connect() as con:
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}/*.parquet')"
+        )
+        for name in ("x_llm_dedup_ngram_jaccard", "x_llm_dedup_containment"):
+            d = DEFS[name]
+            assert_matches_oracle(d.fn(spark, str(tmp_path)), con, d.oracle, name)
     return str(tmp_path)
 
 
-def _cold_pairs(spark, sf):
-    sh = _shingle_rows(spark, sf)
-    n_docs = table(spark, sf, "documents").agg(F.count("*").alias("n_docs"))
-    cold = sh.join(F.broadcast(_hot_shingle_keys(sh, n_docs)), "h", "left_anti")
-    a = cold.select(F.col("doc_id").alias("doc_a"), "h")
-    b = cold.select(F.col("doc_id").alias("doc_b"), "h")
-    return {
-        (r.doc_a, r.doc_b)
-        for r in a.join(b, "h")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-        .collect()
-    }
-
-
-def test_hot_shingle_cap_prunes_boilerplate_only_pairs(spark, tmp_path):
-    # 152 docs share the boilerplate trigram "hot1 hot2 hot3" (df > the 100
-    # floor → capped); docs 1/2 are exact dups sharing rare shingles too.
-    docs = [
-        (1, "r1 r2 r3 r4 hot1 hot2 hot3"),
-        (2, "r1 r2 r3 r4 hot1 hot2 hot3"),
-    ] + [(i, f"u{i}a u{i}b hot1 hot2 hot3") for i in range(10, 160)]
-    sf = _write_docs(spark, tmp_path, docs)
-
-    sh = _shingle_rows(spark, sf)
-    n_docs = table(spark, sf, "documents").agg(F.count("*").alias("n_docs"))
-    hot = {r.h for r in _hot_shingle_keys(sh, n_docs).collect()}
-    boiler_h = (
-        spark.range(1)
-        .select(F.xxhash64(F.lit("hot1 hot2 hot3")).alias("v"))
-        .collect()[0]
-        .v
-    )
-    assert boiler_h in hot
-
-    pairs = _cold_pairs(spark, sf)
-    assert (1, 2) in pairs  # near-dup pair survives via its rare shingles
-    assert (10, 11) not in pairs  # boilerplate-only pair pruned by the cap
+def test_boilerplate_corpus_matches_oracle(spark, tmp_path):
+    sf = _assert_oracles(spark, tmp_path, BOILERPLATE)
 
     out = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in x_llm_dedup_ngram_jaccard(spark, sf).collect()
     }
-    # J is exact over ALL shingles: docs 1/2 are identical → J=1.0, which
-    # requires the hot-correction join to count "hot1 hot2 hot3" back in
-    # (cold-only counting would report 4/(5+5-4) < 1).
+    # J counts ALL shingles: docs 1/2 are identical → J = 1.0 (counting
+    # only the rare ones would report 4/(5+5-4) < 1); boilerplate-only
+    # pairs such as (10, 11) have J = 1/5 and stay out.
     assert out == {(1, 2): 1.0}
+    cont = {
+        (r.doc_inner, r.doc_outer): r.containment
+        for r in x_llm_dedup_containment(spark, sf).collect()
+    }
+    assert cont == {(1, 2): 1.0, (2, 1): 1.0}
 
 
-def test_template_duplicates_survive_the_cap(spark, tmp_path):
-    # 120 docs are literal copies of one template whose every shingle is
-    # hot (df = 120 > the 100 floor).  The cold self-join cannot see these
-    # pairs (their entire overlap is hot) — the mostly-hot completion pass
-    # must recover them with exact J = 1.0.  A doc that is only half
-    # template (cold-dominated) must NOT gain false pairs.
-    template = "hot1 hot2 hot3 hot4 hot5"
-    docs = [(i, template) for i in range(120)]
-    docs.append((500, "c1 c2 c3 c4 hot1 hot2 hot3"))  # cold-dominated
-    sf = _write_docs(spark, tmp_path, docs)
+def test_template_corpus_matches_oracle(spark, tmp_path):
+    sf = _assert_oracles(spark, tmp_path, TEMPLATE)
 
-    sh = _shingle_rows(spark, sf)
-    n_docs = table(spark, sf, "documents").agg(F.count("*").alias("n_docs"))
-    assert _hot_shingle_keys(sh, n_docs).count() == 3  # all template grams
-
-    # the cold route alone misses every template pair...
-    assert all(a == 500 or b == 500 for (a, b) in _cold_pairs(spark, sf)) \
-        or len(_cold_pairs(spark, sf)) == 0
-    # ...but the operator's completion pass recovers all C(120,2) of them
+    # every pair of template copies shares its whole shingle set...
     out = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in x_llm_dedup_ngram_jaccard(spark, sf).collect()
@@ -100,16 +80,5 @@ def test_template_duplicates_survive_the_cap(spark, tmp_path):
     template_pairs = {(a, b) for (a, b) in out if a != 500 and b != 500}
     assert len(template_pairs) == 120 * 119 // 2
     assert all(out[p] == 1.0 for p in template_pairs)
-    # the half-template doc has J = 1/7 with each template copy — below 0.5
+    # ...while the half-template doc has J = 1/7 with each copy
     assert not any(a == 500 or b == 500 for (a, b) in out)
-
-
-def test_cap_inert_below_floor(spark, tmp_path):
-    # A shingle in every doc of a small corpus (df < 100 floor) is NOT
-    # capped — candidates still flow through it.
-    docs = [(i, f"x{i} common1 common2 common3") for i in range(1, 6)]
-    sf = _write_docs(spark, tmp_path, docs)
-    sh = _shingle_rows(spark, sf)
-    n_docs = table(spark, sf, "documents").agg(F.count("*").alias("n_docs"))
-    assert _hot_shingle_keys(sh, n_docs).count() == 0
-    assert len(_cold_pairs(spark, sf)) == 10  # all C(5,2) pairs

@@ -62,16 +62,13 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
 
 
 def test_no_cartesian_in_pair_generation(spark, sf_dir):
+    # Pair generation must never cross or nested-loop the corpus against
+    # itself.
     for name in ("x_llm_dedup_minhash", "x_llm_dedup_ngram_jaccard",
-                 "x_llm_dedup_embed", "x_llm_dedup_simhash"):
-        plan = _physical(DEFS[name].fn(spark, sf_dir))
-        assert "CartesianProduct" not in plan, name
-    # Pair generation must never nested-loop the corpus against itself.
-    # (ngram_jaccard legitimately BNL-joins a broadcast 1-ROW scalar — the
-    # corpus count feeding the hot-shingle cap — so it is exempt here.)
-    for name in ("x_llm_dedup_minhash", "x_llm_dedup_embed",
+                 "x_llm_dedup_containment", "x_llm_dedup_embed",
                  "x_llm_dedup_simhash"):
         plan = _physical(DEFS[name].fn(spark, sf_dir))
+        assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 

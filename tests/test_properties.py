@@ -462,23 +462,18 @@ def test_xlsx_write_read_roundtrip(rows, tmp_path_factory):
         min_size=1,
         max_size=20,
     ),
-    broadcast_dups=st.booleans(),
 )
 @SET
-def test_exact_text_groups_match_single_phase_reference(
-    spark, texts, broadcast_dups
-):
+def test_exact_text_groups_match_single_phase_reference(spark, texts):
     """The two-phase hash-bucketed exact dedup (_exact_text_groups) must
     equal a direct single-phase groupBy(text) on arbitrary small corpora
-    with heavy duplication — the exactness claim the 100 TB form rests
+    with heavy duplication — the exactness claim the two-phase form rests
     on.  The tiny text pool forces every corpus through the multi-member
     bucket (broadcast-semi + regroup) path.  Beyond the callers'
     min/count, the aggs include avg/sum and an order-normalized collect —
     NOT grouping-refinement-safe aggregates, correct here because
     phase-1 values are only emitted for single-member buckets (the r13
-    advice docstring relaxation, now load-bearing and therefore pinned).
-    Both broadcast_dups arms must agree (the web-scale opt-out changes
-    the join strategy, never the result)."""
+    advice docstring relaxation, now load-bearing and therefore pinned)."""
     from dataengineer_scripts_spark.operators.llm import _exact_text_groups
 
     df = spark.createDataFrame(
@@ -493,12 +488,7 @@ def test_exact_text_groups_match_single_phase_reference(
         "sum_chars": F.sum("n_chars"),
         "all_ids": F.array_sort(F.collect_list("doc_id")),
     }
-    got = sorted(
-        map(
-            tuple,
-            _exact_text_groups(df, aggs, broadcast_dups=broadcast_dups).collect(),
-        )
-    )
+    got = sorted(map(tuple, _exact_text_groups(df, aggs).collect()))
     want = sorted(
         map(tuple, df.groupBy("text").agg(*[c.alias(n) for n, c in aggs.items()]).drop("text").collect())
     )
@@ -879,38 +869,6 @@ def test_pagerank_step_matches_reference_and_conserves_mass(
     assert abs(
         sum(got.values()) - ((1.0 - PAGERANK_DAMPING) + PAGERANK_DAMPING * mass_in)
     ) <= n * 2e-12
-
-
-@given(
-    n_docs=st.integers(min_value=50_000, max_value=160_000),
-    extra_dfs=st.lists(st.integers(min_value=1, max_value=5), max_size=3),
-)
-@settings(max_examples=10, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_hot_shingle_cap_boundary_is_exact(spark, n_docs, extra_dfs):
-    """The hot-shingle cap must be STRICT at its boundary: a shingle with
-    document frequency exactly AT max(HOT_SHINGLE_MIN_DF,
-    ceil(HOT_SHINGLE_FRACTION*n_docs)) passes through (the
-    oracle-inertness guarantee BASELINE.md claims for small fixtures
-    rests on df == cap not being hot), while df == cap+1 is dropped.
-    n_docs spans the 100k crossover so BOTH arms of the greatest() are
-    exercised, and the Python reference uses the same double arithmetic
-    (0.001*100000 ceils to 101 in IEEE — the formula must agree with
-    Spark's, FP quirks included; r13 verdict item 5)."""
-    from dataengineer_scripts_spark.operators.llm import (
-        HOT_SHINGLE_FRACTION,
-        HOT_SHINGLE_MIN_DF,
-        _hot_shingle_keys,
-    )
-
-    cap = max(HOT_SHINGLE_MIN_DF, math.ceil(HOT_SHINGLE_FRACTION * n_docs))
-    dfs = {1: cap - 1, 2: cap, 3: cap + 1}
-    dfs.update({10 + i: d for i, d in enumerate(extra_dfs)})
-    rows = [(h,) for h, d in dfs.items() for _ in range(d)]
-    sh = spark.createDataFrame(rows, "h long")
-    nd = spark.createDataFrame([(n_docs,)], "n_docs long")
-    got = {r.h for r in _hot_shingle_keys(sh, nd).collect()}
-    assert got == {h for h, d in dfs.items() if d > cap}, (cap, dfs, got)
 
 
 @given(
