@@ -1044,13 +1044,12 @@ def x_etl_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     whichever column they hit (asserted quantitatively in
     ``tests/test_etl.py``).
 
-    Scale: ``ntile`` over the z-value total order stands in for what a
-    production writer does with ``repartitionByRange(zval)`` — Spark's
-    range partitioner computes the same equal-frequency split from a
-    sample, distributed; the per-granule min/max aggregate is then one
-    hash aggregate over granule ids.  The z-value itself is pure integer
-    codegen (portable div/mod arithmetic, identical expression text in
-    both engines — see ``_zvalue_sql``), evaluated scan-side."""
+    Plan: the z-value is pure integer codegen (portable div/mod
+    arithmetic, identical expression text in both engines — see
+    ``_zvalue_sql``), evaluated scan-side; ``ntile`` over the total order
+    (zval, l_orderkey, l_linenumber) gives the exact equal-frequency
+    granule split as one window in a single task; the per-granule
+    min/max is then one hash aggregate over granule ids."""
     from pyspark.sql import Window
 
     z = table(spark, sf_dir, "lineitem").select(
@@ -1060,9 +1059,8 @@ def x_etl_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
     )
-    # cast: ntile is int32 in Spark but BIGINT in DuckDB (and in the
-    # sharded twin's CASE arithmetic) — pin the exact integer width so a
-    # width-sensitive typed hash can never split the twins
+    # cast: ntile is int32 in Spark but BIGINT in DuckDB — pin the
+    # oracle's integer width so a width-sensitive typed hash agrees
     bucket = (
         F.ntile(ZORDER_BUCKETS)
         .over(Window.orderBy("zval", "l_orderkey", "l_linenumber"))
@@ -1202,103 +1200,6 @@ def x_etl_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.expr("n_chars div 4")).cast("bigint").alias("n_tokens"),
         )
     )
-
-
-#: Range-partition count for the scaled z-order plan (distinct from the
-#: GRANULE count: each partition computes local ranks for many granules).
-ZORDER_RANGE_PARTS = 8
-
-
-def zorder_stats_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB plan for ``x_etl_zorder_stats``, same answer exactly.
-
-    The plain operator's ``ntile`` is a single-task global sort.  Here
-    the table is ``repartitionByRange`` on the z-order sort key, ranks
-    are computed per partition, and per-partition counts broadcast back
-    as offsets — the distributed-prefix-sum shape of
-    ``x_etl_global_row_number``.  The granule id is then pure arithmetic
-    on the recovered global rank — the SQL-standard ntile assignment
-    front-loads the larger granules (with q = total div N and
-    r = total mod N, the first r granules hold q+1 rows), i.e.
-    ``rn <= r*(q+1) ? (rn-1) div (q+1) : r + (rn-1-r*(q+1)) div q``
-    (+1) — so the result is bit-identical to the single-window plan,
-    attested by registering against the same oracle, while the sort
-    runs as ZORDER_RANGE_PARTS parallel tasks.  Rank recovery is
-    boundary-placement-independent (any range split of a total order
-    yields the same global ranks), so the range partitioner's sampling
-    cannot perturb the answer.
-
-    Measured (r11 scale stress, BASELINE.md round-11 addendum): 11x
-    wall at 30x lineitem — sublinear on fixed cores, no funnel."""
-    from pyspark.sql import Window
-
-    z = table(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        "l_suppkey",
-        F.expr(_zvalue_sql("l_partkey", "l_suppkey", "div")).alias("zval"),
-        "l_orderkey",
-        "l_linenumber",
-    )
-    parts = z.repartitionByRange(
-        ZORDER_RANGE_PARTS, "zval", "l_orderkey", "l_linenumber"
-    ).withColumn("pid", F.spark_partition_id())
-    local_rn = F.row_number().over(
-        Window.partitionBy("pid").orderBy("zval", "l_orderkey", "l_linenumber")
-    )
-    # Materialization barrier (same reason as x_etl_global_row_number):
-    # the range shuffle's sampled boundaries differ per execution, and
-    # counts/offsets/total/join must all read ONE consistent pid
-    # assignment.  Rank recovery is invariant to WHERE the boundaries
-    # land, but not to two subtrees landing them differently.
-    numbered = parts.withColumn("local_rn", local_rn).localCheckpoint()
-    counts = numbered.groupBy("pid").agg(F.count("*").alias("cnt"))
-    offsets = counts.select(
-        "pid",
-        F.coalesce(
-            F.sum("cnt").over(
-                Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).alias("offset"),
-    )
-    total = counts.agg(F.sum("cnt").alias("total"))
-    return (
-        numbered.join(F.broadcast(offsets), "pid")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "l_partkey",
-            "l_suppkey",
-            F.expr(
-                f"""CASE
-                    WHEN (offset + local_rn - 1)
-                         < (total % {ZORDER_BUCKETS})
-                           * (total div {ZORDER_BUCKETS} + 1)
-                    THEN (offset + local_rn - 1)
-                         div (total div {ZORDER_BUCKETS} + 1) + 1
-                    ELSE (total % {ZORDER_BUCKETS})
-                         + ((offset + local_rn - 1)
-                            - (total % {ZORDER_BUCKETS})
-                              * (total div {ZORDER_BUCKETS} + 1))
-                           div (total div {ZORDER_BUCKETS}) + 1
-                END"""
-            ).alias("bucket"),
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.min("l_partkey").alias("min_pk"),
-            F.max("l_partkey").alias("max_pk"),
-            F.min("l_suppkey").alias("min_sk"),
-            F.max("l_suppkey").alias("max_sk"),
-        )
-    )
-
-
-# Same oracle as x_etl_zorder_stats: a driver row IS the proof that the
-# range-partitioned rank recovery reproduces ntile exactly.
-register("x_etl_zorder_stats_sharded", oracle=_ZORDER_ORACLE)(
-    zorder_stats_sharded
-)
 
 
 #: Snapshot-diff cutoffs: two "time-travel" versions of the per-order

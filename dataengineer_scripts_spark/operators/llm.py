@@ -129,30 +129,23 @@ def _shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_session_shared``: every shingle consumer (pair-gen, clusters,
     decontamination, source overlap, flagship) reads ONE materialized
     frame instead of re-exploding the corpus."""
-    return _session_shared(
-        spark,
-        sf_dir,
-        "shingles",
+
+    def build() -> DataFrame:
         # rebalanced: the corpus file may scan as one row-group split, and
-        # the explode+hash+distinct-partial above it is the expensive side
-        # — widen the input before the expansion (identity when the scan
-        # is already cluster-wide).
-        lambda: _shingle_rows_of(rebalanced(table(spark, sf_dir, "documents"))),
-    )
+        # the explode+hash+distinct-partial below is the expensive side —
+        # widen the input before the expansion (identity when the scan is
+        # already cluster-wide).
+        docs = rebalanced(table(spark, sf_dir, "documents"))
+        return (
+            docs.select(
+                "doc_id", F.explode(_tri_shingle_array(F.col("text"))).alias("s")
+            )
+            .filter(F.col("s").isNotNull())
+            .select("doc_id", F.xxhash64("s").alias("h"))
+            .distinct()
+        )
 
-
-def _shingle_rows_of(docs: DataFrame) -> DataFrame:
-    """:func:`_shingle_rows` over a caller-supplied (possibly filtered)
-    documents frame — the batch side of the incremental-index operators
-    shingles ONLY the batch, never the corpus."""
-    s = F.col("s")
-    return (
-        docs
-        .select("doc_id", F.explode(_tri_shingle_array(F.col("text"))).alias("s"))
-        .filter(s.isNotNull())
-        .select("doc_id", F.xxhash64("s").alias("h"))
-        .distinct()
-    )
+    return _session_shared(spark, sf_dir, "shingles", build)
 
 
 def _pair_jaccard(pairs: DataFrame, sh: DataFrame) -> DataFrame:
@@ -1012,10 +1005,9 @@ def _query_matrix_broadcast(spark, qids: np.ndarray, qmat: np.ndarray):
 
 
 def knn_batch_broadcast(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
-    """Batch kNN, broadcast regime: the query side is a DataFrame whose
-    materialized matrix fits executor memory (Q×dim doubles — 1M×64 ≈
-    0.5 GB upper bound; beyond that use ``knn_batch_blocked``).  The query
-    matrix rides a **TorrentBroadcast** — staged through the driver once
+    """Batch kNN: the query side is a DataFrame whose materialized matrix
+    is collected to the driver (Q×dim doubles — 1000×64 at sf0.1).  The
+    query matrix rides a **TorrentBroadcast** — staged through the driver once
     (exactly like a broadcast-hash-join build side) and torrent-distributed
     once per executor, NOT pickled into every task closure.  The corpus is
     scanned once by ONE narrow ``mapInPandas`` (per-batch GEMM +
@@ -1045,95 +1037,21 @@ def knn_batch_broadcast(corpus: DataFrame, queries: DataFrame, k: int) -> DataFr
     )
 
 
-def knn_batch_blocked(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    q_blocks: int = 4,
-    c_blocks: int = 4,
-) -> DataFrame:
-    """Batch kNN, blocked-GEMM regime: NO driver collect, NO broadcast, no
-    fit-anywhere assumption on either side — the fully distributed path
-    when the query set is itself a big table.
-
-    Bipartite variant of the ``x_llm_dedup_embed`` upper-triangle grid:
-    queries hash into ``q_blocks`` row blocks, corpus into ``c_blocks``
-    column blocks; each side is replicated to the other side's block count
-    (corpus ×q_blocks, queries ×c_blocks — the entire shuffle cost, chosen
-    by the two knobs) and every (qb, cb) cell is one ``applyInPandas``
-    group computing a bounded (Q/q_blocks × C/c_blocks) GEMM with an exact
-    partial top-k.  Each query meets every corpus vector exactly once
-    across its ``c_blocks`` cells, so the final window over (c_blocks × k)
-    partials per query is exact.  Task memory is bounded by the block
-    sizes regardless of total scale."""
-    c = corpus.select(
-        "vec_id",
-        "e",
-        F.lit("c").alias("side"),
-        F.pmod(F.xxhash64("vec_id"), F.lit(c_blocks)).alias("cb"),
-        F.explode(F.sequence(F.lit(0), F.lit(q_blocks - 1))).alias("qb"),
-    )
-    q = queries.select(
-        "vec_id",
-        "e",
-        F.lit("q").alias("side"),
-        F.explode(F.sequence(F.lit(0), F.lit(c_blocks - 1))).alias("cb"),
-        F.pmod(F.xxhash64("vec_id"), F.lit(q_blocks)).alias("qb"),
-    ).select("vec_id", "e", "side", "cb", "qb")
-
-    def cell_topk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        qs = pdf[pdf["side"] == "q"]
-        cs = pdf[pdf["side"] == "c"]
-        if qs.empty or cs.empty:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "cosine": []}
-            ).astype(
-                {"query_id": "int64", "neighbor_id": "int64", "cosine": "float64"}
-            )
-        return _partial_topk_frame(
-            qs["vec_id"].to_numpy(),
-            np.vstack(qs["e"].to_numpy()),
-            cs["vec_id"].to_numpy(),
-            np.vstack(cs["e"].to_numpy()),
-            k,
-        )
-
-    partial = c.unionByName(q).groupBy("qb", "cb").applyInPandas(
-        cell_topk, "query_id long, neighbor_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return partial.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-
-
 @register(
     "x_llm_knn_batch",
     oracle=_SQL_KNN_BATCH.format(normed=_SQL_NORMED.strip().rstrip()),
 )
 def x_llm_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed batch similarity search, broadcast regime: the query
-    set is a DataFrame (every other vector — 1000 queries at sf0.1), not a
-    driver-held literal list; exact top-5 cosine neighbors per query.  See
-    ``knn_batch_broadcast`` for the plan shape (corpus never shuffled)."""
+    """Distributed batch similarity search: the query set is a DataFrame
+    (every other vector — 1000 queries at sf0.1), not a driver-held
+    literal list; exact top-5 cosine neighbors per query.  Plan: the
+    query matrix is broadcast and the corpus is scanned once by one
+    ``mapInPandas`` with a partition-local top-k, then one window keeps
+    the global top-k (see ``knn_batch_broadcast``; corpus never
+    shuffled)."""
     e = _normalized(spark, sf_dir)
     queries = e.filter(F.col("vec_id") % KNN_BATCH_MOD == 0)
     return knn_batch_broadcast(e, queries, KNN_K)
-
-
-@register(
-    "x_llm_knn_batch_blocked",
-    oracle=_SQL_KNN_BATCH.format(normed=_SQL_NORMED.strip().rstrip()),
-)
-def x_llm_knn_batch_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed batch similarity search, blocked regime: same query set
-    and same exact answer as ``x_llm_knn_batch``, computed with NO driver
-    collect and no broadcast — the path for query sets too big to fit
-    anywhere (see ``knn_batch_blocked``).  Both regimes hash-match the
-    same oracle, locking in that the regime switch is purely physical."""
-    e = _normalized(spark, sf_dir)
-    queries = e.filter(F.col("vec_id") % KNN_BATCH_MOD == 0)
-    return knn_batch_blocked(e, queries, KNN_K)
 
 
 IVF_CELLS = 10
@@ -2375,8 +2293,7 @@ def _pack_assignments(toks: DataFrame, capacity: int) -> DataFrame:
     of earlier docs in (lang, doc_id) order) div capacity``.  ``toks``
     must carry (doc_id, lang, n_tokens).  Integer ``div`` end-to-end
     (matches the oracle's ``//``): a double division .cast('long')
-    diverges once cumulative fill passes 2^53 — exactly the regime the
-    100 TB framing implies."""
+    diverges once cumulative fill passes 2^53."""
     before = (
         Window.partitionBy("lang")
         .orderBy("doc_id")
@@ -2403,83 +2320,14 @@ def x_llm_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-sum — one shuffle, no stateful scan, identical in any engine —
     where true first-fit packing is an inherently sequential fold.
 
-    Scale: the window sorts per lang, so one language = one task's sort.
-    At 100 TB, pre-shard the partition key to (lang, doc_id div S) and
-    recover the global prefix sum from broadcast per-shard totals — the
-    sort becomes embarrassingly parallel and the assignment is BIT-
-    IDENTICAL (``x_llm_pack_sequences_sharded`` below is that plan,
-    registered against this same oracle; ``tests/test_curation.py``
-    asserts sharded ≡ unsharded on the fixture).  Fixture langs are ~100
-    docs each, so the plain key is the right plan here."""
+    Plan: one scan, one shuffle on ``lang`` and one running-sum window
+    per language ordered by ``doc_id`` (``_pack_assignments``); each
+    language is one task's sort, and fixture languages hold about 100
+    documents each."""
     toks = table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.expr("n_chars div 4").alias("n_tokens")
     )
     return _pack_assignments(toks, PACK_CAPACITY_TOKENS)
-
-
-#: Shard width (docs per shard) for the scaled packing plan.  Small on
-#: purpose for the fixtures so every lang spans multiple shards and the
-#: equivalence below is exercised across many shard boundaries.
-PACK_SHARD_DOCS = 64
-
-
-def pack_sequences_sharded(
-    spark: SparkSession, sf_dir: str, shard_docs: int = PACK_SHARD_DOCS
-) -> DataFrame:
-    """The 100 TB plan for ``x_llm_pack_sequences``, same answer exactly.
-
-    The plain operator's window sorts one whole language in one task.
-    Here the sort key is pre-sharded to ``(lang, doc_id div shard_docs)``
-    so each task sorts only one shard, and the global cumulative fill is
-    recovered as ``shard_start_fill + local_fill`` where the per-shard
-    start fills come from a second, TINY prefix sum over per-shard totals
-    (one row per shard — thousands of rows at 100 TB, broadcast back).
-    ``doc_id div shard_docs`` is monotone in ``doc_id``, so shard-major
-    order equals global order and the recovered prefix sum is bit-equal
-    to the single-window one: identical pack ids, embarrassingly parallel
-    sort.  Same distributed-prefix-sum shape as
-    ``x_etl_global_row_number`` (operators/etl.py)."""
-    toks = table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        F.expr("n_chars div 4").alias("n_tokens"),
-        F.expr(f"doc_id div {shard_docs}").alias("_shard"),
-    )
-    local = Window.partitionBy("lang", "_shard").orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    local_fill = F.coalesce(F.sum("n_tokens").over(local), F.lit(0))
-    shard_totals = toks.groupBy("lang", "_shard").agg(
-        F.sum("n_tokens").alias("_tot")
-    )
-    over_shards = Window.partitionBy("lang").orderBy("_shard").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    starts = shard_totals.select(
-        "lang",
-        "_shard",
-        F.coalesce(F.sum("_tot").over(over_shards), F.lit(0)).alias("_start"),
-    )
-    return (
-        toks.withColumn("_local", local_fill)
-        .join(F.broadcast(starts), ["lang", "_shard"])
-        .select(
-            "doc_id",
-            "lang",
-            "n_tokens",
-            F.expr(f"(_start + _local) div {PACK_CAPACITY_TOKENS}").alias(
-                "pack_id"
-            ),
-        )
-    )
-
-
-# Registered against the SAME oracle as x_llm_pack_sequences: the driver's
-# hash comparison is itself the proof that the sharded plan reproduces the
-# single-window assignment exactly.
-register("x_llm_pack_sequences_sharded", oracle=_PACK_ORACLE)(
-    pack_sequences_sharded
-)
 
 
 #: Incremental split: doc_id % 10 >= 8 plays the "newly arrived batch"
@@ -2510,37 +2358,19 @@ _INCR_ORACLE = f"""
 def x_llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental dedup: near-dup pairs (exact n-gram Jaccard >= 0.5)
     between a NEW batch (doc_id % 10 >= 8 stands in for today's crawl)
-    and the EXISTING corpus — the production shape of dedup, where the
-    corpus is 100 TB and already deduped, and re-running the full
-    self-join per batch (``x_llm_dedup_ngram_jaccard``) would redo
-    O(corpus²) work for an O(batch × corpus-overlap) question.
+    and the EXISTING, already-deduped corpus — the question a nightly
+    batch asks, where re-running the full self-join
+    (``x_llm_dedup_ngram_jaccard``) would also score every corpus pair.
 
-    The pair generator is a BIPARTITE inverted-index equi-join: the new
-    batch's shingle rows join the corpus's shingle index on the 64-bit
-    shingle hash, so candidate count scales with (batch shingles ×
-    per-shingle document frequency) — independent of corpus size for
-    bounded df.  This fixture implementation shingles both sides fresh
-    (one documents scan); the production deployment keeps the corpus
-    side as a MAINTAINED index (shingle rows persisted bucketed by
-    ``h`` as each batch is admitted), so the per-batch cost becomes one
-    narrow scan of the batch + one co-located join, with the corpus
-    text never re-shingled.  Sizes count FULL shingle sets on both
-    sides, so reported J is exact, same as the batch operator.  Measured (r12 stress): 1.9x wall at 10x
-    corpus, matched batch docs exactly 10x —
-    `scale_stress_r12_incremental.json`."""
+    Plan: one documents scan shingled once, split into the two sides;
+    the pair generator is a BIPARTITE inverted-index equi-join on the
+    64-bit shingle hash, so candidate count scales with (batch shingles ×
+    per-shingle document frequency).  Per-side sizes count FULL shingle
+    sets, so reported J is exact, same as the batch operator."""
     sh = _shingle_rows(spark, sf_dir)
     is_new = F.pmod("doc_id", F.lit(10)) >= _INCR_NEW_MOD
-    return _bipartite_jaccard(
-        sh.filter(~is_new).select(F.col("doc_id").alias("doc_old"), "h"),
-        sh.filter(is_new).select(F.col("doc_id").alias("doc_new"), "h"),
-    )
-
-
-def _bipartite_jaccard(old_sh: DataFrame, new_sh: DataFrame) -> DataFrame:
-    """Exact-Jaccard (>= 0.5) pairs between two shingle-row sides joined on
-    the 64-bit hash — the shared assembly of ``x_llm_dedup_incremental``
-    and ``x_llm_dedup_incremental_indexed`` (both sides' sizes count their
-    FULL shingle sets, so reported J is exact)."""
+    old_sh = sh.filter(~is_new).select(F.col("doc_id").alias("doc_old"), "h")
+    new_sh = sh.filter(is_new).select(F.col("doc_id").alias("doc_new"), "h")
     common = (
         old_sh.join(new_sh, "h")
         .groupBy("doc_old", "doc_new")
@@ -2555,122 +2385,6 @@ def _bipartite_jaccard(old_sh: DataFrame, new_sh: DataFrame) -> DataFrame:
         .filter(j >= 0.5)
         .select("doc_old", "doc_new", F.round(j, 6).alias("jaccard"))
     )
-
-
-#: Bucket count for the maintained incremental-dedup shingle index.  On a
-#: cluster this is sized to corpus shingles / ~128 MB; 16 keeps the local
-#: fixture honest without 1000 tiny files.
-_INCR_INDEX_BUCKETS = 16
-
-#: On-disk index format version.  The persisted bucketed index survives
-#: across sessions, so its identity must cover not just the corpus files
-#: but HOW they were indexed: bump this whenever the shingle definition
-#: (`_shingle_rows_of` / `_tri_shingle_array` / `SHINGLE_N` / the hash
-#: function) or the bucket layout changes, or a fresh session would
-#: silently re-register a stale dir built under the old rules.  The
-#: fingerprint below also folds in SHINGLE_N and _INCR_INDEX_BUCKETS
-#: directly so the common parameter tweaks invalidate without a manual
-#: bump.
-_INCR_INDEX_FORMAT_V = 1
-
-
-@register("x_llm_dedup_incremental_indexed", oracle=_INCR_ORACLE)
-def x_llm_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``x_llm_dedup_incremental`` in its PRODUCTION shape: the corpus
-    shingle index is a MAINTAINED bucketed table (bucketed+sorted by the
-    64-bit shingle hash ``h``), and the per-batch run shingles ONLY the
-    new batch — the corpus text is never re-read and the corpus index is
-    never re-shuffled (its side of the join is co-located by the bucketed
-    layout; only the batch side exchanges, into the index's bucketing).
-
-    Index lifecycle here: built once per (scale-factor, session-catalog)
-    from the corpus partition of ``documents`` and admitted batches would
-    be appended on acceptance (bucketBy supports append with identical
-    bucketing).  At 100 TB the index build is the one-time cost the
-    incremental shape amortizes: every nightly batch then pays
-    O(batch shingles × per-shingle df), independent of corpus size.
-    Same exact-J semantics and oracle as ``x_llm_dedup_incremental``
-    (sizes count full shingle sets on both sides).  Measured (r12
-    stress, warm index): 1.8x wall at 10x corpus, matched batch docs
-    exactly 10x — `scale_stress_r12_incremental.json`."""
-    import hashlib
-    import os
-
-    docs = table(spark, sf_dir, "documents")
-    is_new = F.pmod("doc_id", F.lit(10)) >= _INCR_NEW_MOD
-
-    # Index identity = corpus identity + index FORMAT: the fingerprint
-    # covers the source file (full path + mtime + size) so a regenerated
-    # fixture or same-basename sibling never serves a stale index, AND the
-    # indexing recipe (format version, shingle width, bucket count) so a
-    # code change to the shingle/bucket logic misses the cross-session
-    # _SUCCESS re-register check and rebuilds instead of silently reusing
-    # a dir built under the old rules.  Production analog: the maintained
-    # index is versioned with both the corpus snapshot and the indexer
-    # release that built it.
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha1(
-        f"{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}"
-        f":v{_INCR_INDEX_FORMAT_V}:n{SHINGLE_N}:b{_INCR_INDEX_BUCKETS}".encode()
-    ).hexdigest()[:10]
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    tbl = f"incr_shingle_idx_{tag}_{fp}"
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".tmp",
-        "incr_index",
-    )
-    loc = os.path.join(base, tbl)
-    # A registered table whose backing dir was cleaned (e.g. `.tmp` wiped
-    # mid-session) must rebuild, not fail on read.
-    if spark.catalog.tableExists(tbl) and not os.path.isdir(loc):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    if not spark.catalog.tableExists(tbl):
-        # Fixture regeneration changes the fingerprint: prune superseded
-        # sibling indexes for the same sf tag so .tmp doesn't accumulate
-        # one orphaned bucketed dir per regeneration.
-        import shutil
-
-        stale_prefix = f"incr_shingle_idx_{tag}_"
-        if os.path.isdir(base):
-            for d in os.listdir(base):
-                if d.startswith(stale_prefix) and d != tbl:
-                    spark.sql(f"DROP TABLE IF EXISTS {d}")
-                    shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-        if os.path.isfile(os.path.join(loc, "_SUCCESS")):
-            # The catalog is session-scoped (in-memory) but the bucketed
-            # files persist: a COMPLETE index dir for this exact corpus
-            # fingerprint re-registers as an external bucketed table
-            # instead of re-shingling the corpus — this is the whole
-            # point of a maintained index (cross-run amortization), and
-            # it's what every fresh driver/bench session hits.
-            # LOCATION is a SQL string literal: escape single quotes so a
-            # checkout path containing one can't break the statement (the
-            # write branch uses .option("path") and is unaffected).
-            loc_sql = loc.replace("'", "''")
-            spark.sql(
-                f"CREATE TABLE {tbl} (doc_id BIGINT, h BIGINT)"
-                f" USING parquet CLUSTERED BY (h) SORTED BY (h)"
-                f" INTO {_INCR_INDEX_BUCKETS} BUCKETS LOCATION '{loc_sql}'"
-            )
-        else:
-            (
-                _shingle_rows_of(docs.filter(~is_new))
-                .select("doc_id", "h")
-                .write.mode("overwrite")
-                .option("path", loc)
-                .bucketBy(_INCR_INDEX_BUCKETS, "h")
-                .sortBy("h")
-                .format("parquet")
-                .saveAsTable(tbl)
-            )
-    index = spark.table(tbl).select(F.col("doc_id").alias("doc_old"), "h")
-
-    new_sh = _shingle_rows_of(docs.filter(is_new)).select(
-        F.col("doc_id").alias("doc_new"), "h"
-    )
-    return _bipartite_jaccard(index, new_sh)
 
 
 #: SemDeDup geometry: 16 deterministic seed centroids refined by ONE

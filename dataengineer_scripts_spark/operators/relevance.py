@@ -265,7 +265,7 @@ def x_llm_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulate DECIMAL — both engines produce the same single row.
 
     Plan: one token explode → vocabulary hash aggregate; the rank is
-    TWO-LEVEL (the ``x_etl_zorder_stats_sharded`` pattern): the vocab
+    TWO-LEVEL (the ``x_etl_global_row_number`` shape): the vocab
     frame is ``repartitionByRange`` on the rank key ``(c desc, w)``,
     ranks are per-partition ``row_number``, and per-partition counts
     broadcast back as offsets — global rank = offset + local rank,

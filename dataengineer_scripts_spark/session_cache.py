@@ -9,9 +9,9 @@ restarted SparkContext or a different fixture rebuilds; checkpointed
 frames are deterministic, so cached-vs-fresh results are bit-identical
 (the pytest sweep exercises both orders).
 
-Hoisted out of ``operators/llm.py`` in round 10 when ``operators/bi.py``
-grew the same need (the PageRank graph build shared by both variants) —
-ONE mechanism, not two parallel dicts with the same key discipline.
+``operators/llm.py`` and ``operators/bi.py`` (the PageRank graph build
+shared by both variants) use it, and ``tables.table``'s loader memo keeps
+its own dict under the same rule, ``_memoized``.
 """
 
 from __future__ import annotations
@@ -24,21 +24,39 @@ from pyspark.sql import DataFrame, SparkSession
 _SESSION_FRAMES: dict[tuple[str, str, str], DataFrame] = {}
 
 
+def _memoized(
+    memo: dict[tuple[str, str, str], DataFrame],
+    spark: SparkSession,
+    sf_dir: str,
+    key: str,
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """The package's one memo rule, shared with ``tables.table``: entries
+    are keyed by (applicationId, abspath(sf_dir), key), so a restarted
+    SparkContext or another fixture directory rebuilds, and a hit returns
+    the very DataFrame object the miss stored.  A miss first evicts the
+    entries bound to stopped contexts: a process that cycles SparkSessions
+    must not retain dead-JVM DataFrames forever."""
+    app_id = spark.sparkContext.applicationId
+    k = (app_id, os.path.abspath(sf_dir), key)
+    df = memo.get(k)
+    if df is None:
+        for stale in [mk for mk in memo if mk[0] != app_id]:
+            memo.pop(stale, None)
+        df = memo[k] = build()
+    return df
+
+
 def session_shared(
     spark: SparkSession,
     sf_dir: str,
     key: str,
     build: Callable[[], DataFrame],
 ) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    k = (app_id, os.path.abspath(sf_dir), key)
-    df = _SESSION_FRAMES.get(k)
-    if df is None:
-        # evict frames bound to stopped contexts (same discipline as
-        # tables._TABLE_MEMO — r19 ADVICE: a process that cycles
-        # SparkSessions must not retain dead-JVM DataFrames forever)
-        for stale in [sk for sk in _SESSION_FRAMES if sk[0] != app_id]:
-            _SESSION_FRAMES.pop(stale, None)
-        df = build().localCheckpoint(eager=False)
-        _SESSION_FRAMES[k] = df
-    return df
+    return _memoized(
+        _SESSION_FRAMES,
+        spark,
+        sf_dir,
+        key,
+        lambda: build().localCheckpoint(eager=False),
+    )

@@ -190,18 +190,6 @@ class RestDataSourceReader(DataSourceReader):
         self.limit: int | None = (
             int(options["limit"]) if "limit" in options else None
         )
-        #: "reuse" (default): partition 0 serves the planning probe's
-        #: payload — one request total for a ≤1-page read, but the page-0
-        #: rows are a snapshot from PLANNING time, so a server-side write
-        #: between planning and execution yields page 0 stale while later
-        #: pages are fresh.  "refetch": every partition (page 0 included)
-        #: fetches at read time — one extra request, uniform read point.
-        self.probe_payload = options.get("probe_payload", "reuse")
-        if self.probe_payload not in ("reuse", "refetch"):
-            raise ValueError(
-                f"probe_payload must be 'reuse' or 'refetch', got "
-                f"{self.probe_payload!r}"
-            )
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         """Translate supported predicates to API query params; yield back
@@ -247,16 +235,17 @@ class RestDataSourceReader(DataSourceReader):
         # then one partition per page — executors fetch pages in parallel.
         # The probe's payload rides along in partition 0, so the limit≤page
         # case (the reference's `page_size=8&page=0` single-page fetch,
-        # app.py:126) performs exactly one data request in total.
+        # app.py:126) performs exactly one data request in total.  Those
+        # page-0 rows are a planning-time snapshot: a server-side write
+        # between planning and execution shows on later pages only.
         head = _get_json(self._query(0), self.token)
         total = head["total"]
         limit = self._effective_limit()
         if limit is not None:
             total = min(total, limit)
         n_pages = max(1, math.ceil(total / self.page_size))
-        reuse = self.probe_payload != "refetch"
         return [
-            RestPagePartition(p, rows=head["data"] if p == 0 and reuse else None)
+            RestPagePartition(p, rows=head["data"] if p == 0 else None)
             for p in range(n_pages)
         ]
 
@@ -385,17 +374,13 @@ def rest_read(
     limit: int | None = None,
     path: str | None = None,
     schema: str | None = None,
-    probe_payload: str | None = None,
 ):
     """The blessed read path for the ``rest`` format.  ``limit`` is pushed
     to the source as a reader option (bounding pages fetched to
     ``ceil(limit/page_size)``, the reference's bounded-fetch behavior at
     ``app.py:126``) AND applied as a plan-level ``df.limit`` — the plan
     limit guarantees the row count regardless of what the source honors,
-    the option keeps the bytes moved proportional to the limit.
-    ``probe_payload``: "reuse" (default) serves page 0 from the planning
-    probe's snapshot (fewest requests); "refetch" re-reads page 0 at
-    execution for a uniform read point (see RestDataSourceReader)."""
+    the option keeps the bytes moved proportional to the limit."""
     register_rest_source(spark)
     reader = (
         spark.read.format("rest")
@@ -409,8 +394,6 @@ def rest_read(
         reader = reader.option("path", path)
     if schema is not None:
         reader = reader.option("schema", schema)
-    if probe_payload is not None:
-        reader = reader.option("probe_payload", probe_payload)
     df = reader.load()
     return df.limit(limit) if limit is not None else df
 

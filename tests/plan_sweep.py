@@ -43,11 +43,11 @@ UNPARTITIONED_WINDOW_ALLOWLIST: dict[str, int] = {
     "x_win_period_over_period": 1,
     # 9-row leading-digit distribution
     "x_agg_benford_distribution": 1,
-    # partition-count-grain prefix sums (the distributed row-number /
-    # z-order shard-offset shape: one row PER PARTITION crosses)
+    # partition-count-grain prefix sums (the distributed row-number
+    # shape: one row PER PARTITION crosses)
     "x_etl_global_row_number": 1,
-    "x_etl_zorder_stats_sharded": 1,
-    # the documented single-task DIDACTIC twin (production twin above)
+    # the exact equal-frequency granule split: one ntile over the whole
+    # lineitem total order in a single task, bounded by the fixture's size
     "x_etl_zorder_stats": 1,
     # source-grain (≤ handful of sources) cumulative shares / weights
     "x_llm_dataset_split": 1,

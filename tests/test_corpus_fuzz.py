@@ -80,11 +80,11 @@ CORPUS_IDS = sorted(
 )
 
 # Silent-shrinkage pin (mirrors BROAD_IDS): a legitimate registry change
-# updates this consciously; a resolver regression fails loudly.  At 78 the
+# updates this consciously; a resolver regression fails loudly.  At 75 the
 # enrollment covers EVERY oracle op of llm.py/relevance.py/multimodal.py
-# (63+4+6, verified at pin time) plus the mixed/relational corpus readers.
-assert len(CORPUS_IDS) == 78, (
-    f"CORPUS_IDS enrollment changed: {len(CORPUS_IDS)} != 78 — if the "
+# (60+4+6, verified at pin time) plus the mixed/relational corpus readers.
+assert len(CORPUS_IDS) == 75, (
+    f"CORPUS_IDS enrollment changed: {len(CORPUS_IDS)} != 75 — if the "
     "registry legitimately grew/shrank, update the pin; if not, the "
     "transitive-read resolver just silently dropped ops from coverage"
 )

@@ -336,34 +336,6 @@ def test_curation_manifest_stage_properties(spark, sf_dir):
     man.unpersist()
 
 
-def test_pack_sequences_sharded_equals_unsharded(spark, sf_dir):
-    """The documented 100 TB mitigation for x_llm_pack_sequences, as an
-    executable proof: pre-sharding the window key to (lang, doc_id div S)
-    and recovering the global fill from broadcast per-shard totals must
-    reproduce the single-window pack assignment BIT-EXACTLY — for several
-    shard widths, including ones that cut packs mid-fill."""
-    from dataengineer_scripts_spark.operators.llm import pack_sequences_sharded
-
-    base = registry.definitions()["x_llm_pack_sequences"].fn
-    expect = {tuple(r) for r in base(spark, sf_dir).collect()}
-    for shard_docs in (1, 7, 64):
-        got = {
-            tuple(r)
-            for r in pack_sequences_sharded(spark, sf_dir, shard_docs).collect()
-        }
-        assert got == expect, f"shard_docs={shard_docs} diverged"
-
-
-def test_pack_sequences_sharded_sort_is_per_shard(spark, sf_dir):
-    """The point of the sharded plan: the big-side window partitions on
-    (lang, _shard), never on lang alone, so no task sorts a whole
-    language."""
-    from dataengineer_scripts_spark.operators.llm import pack_sequences_sharded
-
-    plan = pack_sequences_sharded(spark, sf_dir)._jdf.queryExecution().toString()
-    assert "_shard" in plan
-
-
 def test_pq_seeds_encode_to_themselves_with_zero_error(spark, sf_dir):
     """PQ sanity invariant: the codebook IS the first PQ_K vectors'
     subvectors, so each seed must encode to its own id in every subspace

@@ -4,8 +4,6 @@ valve, broadcast reuse."""
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pytest
 
@@ -292,72 +290,35 @@ def test_ntz_cast_branch_exercised(spark, tmp_path, monkeypatch):
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
 
-def test_incremental_index_rebuilds_when_location_cleaned(spark, sf_dir):
-    """x_llm_dedup_incremental_indexed: a registered catalog table whose
-    backing .tmp dir was wiped must transparently rebuild, and superseded
-    fingerprint siblings for the same sf tag are pruned on build."""
-    import shutil
+def test_memo_rule_hits_by_identity_and_evicts_stopped_contexts(spark, sf_dir):
+    """tables.table and session_cache.session_shared share one memo rule:
+    a hit returns the stored object, a miss under a new applicationId
+    evicts the entries of stopped contexts, and table() never builds
+    through session_shared (it would checkpoint the scan)."""
+    from types import SimpleNamespace
 
-    from dataengineer_scripts_spark.operators.llm import (
-        x_llm_dedup_incremental_indexed,
-    )
+    from dataengineer_scripts_spark import session_cache, tables
 
-    n0 = x_llm_dedup_incremental_indexed(spark, sf_dir).count()
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    [tbl] = [
-        t.name
-        for t in spark.catalog.listTables()
-        if t.name.startswith(f"incr_shingle_idx_{tag}_")
-    ]
-    import dataengineer_scripts_spark.operators.llm as llm_mod
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(llm_mod.__file__)))
-    )
-    idx_base = os.path.join(repo_root, ".tmp", "incr_index")
-    # Plant a stale sibling dir for the same tag and wipe the live one.
-    tag_prefix = tbl.rsplit("_", 1)[0] + "_"
-    stale = os.path.join(idx_base, tag_prefix + "deadbeef00")
-    os.makedirs(stale, exist_ok=True)
-    shutil.rmtree(os.path.join(idx_base, tbl))
-    n1 = x_llm_dedup_incremental_indexed(spark, sf_dir).count()
-    assert n1 == n0
-    assert os.path.isdir(os.path.join(idx_base, tbl))  # rebuilt
-    assert not os.path.isdir(stale)  # pruned
+    def session(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
 
+    built: list[object] = []
 
-def test_incremental_index_format_version_invalidates(spark, sf_dir, monkeypatch):
-    """The persisted index survives across sessions, so its fingerprint
-    must cover the indexing RECIPE, not just the corpus files: bumping
-    _INCR_INDEX_FORMAT_V must miss the _SUCCESS re-register check, build a
-    fresh dir under a new fingerprint, prune the old sibling, and return
-    the same answer."""
-    import dataengineer_scripts_spark.operators.llm as llm_mod
-    from dataengineer_scripts_spark.operators.llm import (
-        x_llm_dedup_incremental_indexed,
-    )
+    def build():
+        built.append(object())
+        return built[-1]
 
-    n0 = x_llm_dedup_incremental_indexed(spark, sf_dir).count()
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    [tbl0] = [
-        t.name
-        for t in spark.catalog.listTables()
-        if t.name.startswith(f"incr_shingle_idx_{tag}_")
-    ]
-    monkeypatch.setattr(llm_mod, "_INCR_INDEX_FORMAT_V", 999)
-    n1 = x_llm_dedup_incremental_indexed(spark, sf_dir).count()
-    [tbl1] = [
-        t.name
-        for t in spark.catalog.listTables()
-        if t.name.startswith(f"incr_shingle_idx_{tag}_")
-    ]
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(llm_mod.__file__)))
-    )
-    idx_base = os.path.join(repo_root, ".tmp", "incr_index")
-    assert tbl1 != tbl0  # recipe change → new identity
-    assert n1 == n0  # same semantics
-    assert os.path.isdir(os.path.join(idx_base, tbl1))
-    assert not os.path.isdir(os.path.join(idx_base, tbl0))  # old dir pruned
+    memo: dict = {}
+    first = session_cache._memoized(memo, session("app-1"), "x/../sf", "k", build)
+    assert session_cache._memoized(memo, session("app-1"), "sf", "k", build) is first
+    assert len(built) == 1
+    session_cache._memoized(memo, session("app-2"), "sf", "k", build)
+    assert len(built) == 2 and [k[0] for k in memo] == ["app-2"]
+
+    frames = dict(session_cache._SESSION_FRAMES)
+    nation = tables.table(spark, sf_dir, "nation")
+    assert tables.table(spark, sf_dir, "nation") is nation
+    assert session_cache._SESSION_FRAMES == frames
 
 
 def test_stream_events_ts_is_plain_timestamp(spark, sf_dir):
@@ -366,22 +327,16 @@ def test_stream_events_ts_is_plain_timestamp(spark, sf_dir):
     assert dict(stream_events(spark, sf_dir).dtypes)["ts"] == "timestamp"
 
 
-def test_rest_probe_payload_refetch_leaves_page0_unseeded(monkeypatch):
-    """probe_payload=refetch must not embed the planning probe's snapshot
-    into partition 0 (uniform read point across pages)."""
+def test_rest_page0_rides_the_planning_probe(monkeypatch):
+    """Partition 0 carries the planning probe's rows (one request in total
+    for a single-page read); every later page fetches at read time."""
     import dataengineer_scripts_spark.sources.rest as rest
 
     head = {"total": 20, "data": [{"id": "n1", "type": "job"}]}
     monkeypatch.setattr(rest, "_get_json", lambda url, token: head)
 
-    parts = _mk_reader(probe_payload="refetch").partitions()
-    assert all(p.rows is None for p in parts)  # page 0 NOT seeded
-
-    parts2 = _mk_reader().partitions()  # default: reuse
-    assert parts2[0].rows == head["data"] and parts2[1].rows is None
-
-    with pytest.raises(ValueError):
-        _mk_reader(probe_payload="refresh")  # typo must fail loudly
+    parts = _mk_reader().partitions()
+    assert parts[0].rows == head["data"] and parts[1].rows is None
 
 
 def test_ntz_parquet_normalized_under_hostile_timezone(spark, tmp_path):

@@ -101,15 +101,6 @@ def test_ann_score_companions_never_shuffle_the_corpus(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in lsh
 
 
-def test_knn_batch_blocked_is_two_bounded_shuffles(spark, sf_dir):
-    # blocked regime: one hash shuffle into (qb, cb) GEMM cells + the
-    # final window over partials — never a join, never a collect.
-    plan = _physical(DEFS["x_llm_knn_batch_blocked"].fn(spark, sf_dir))
-    assert plan.count("Exchange") == 2
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_whole_stage_codegen_on_scalar_layer(spark, sf_dir):
     plan = _physical(DEFS["fn_case_status"].fn(spark, sf_dir))
     # codegen'd operators carry the `*(stageId)` prefix in plan text
@@ -143,13 +134,6 @@ def test_source_mix_broadcasts_totals(spark, sf_dir):
     plan = _physical(DEFS["x_llm_source_mix"].fn(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_incremental_index_scan_is_bucketed(spark, sf_dir):
-    plan = _physical(DEFS["x_llm_dedup_incremental_indexed"].fn(spark, sf_dir))
-    # the maintained corpus index must be read through its bucketed layout
-    # (its side of the h-join never re-shuffles)
-    assert "Bucketed: true" in plan
 
 
 def test_quantize_and_normalize_are_narrow(spark, sf_dir):

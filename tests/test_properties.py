@@ -234,13 +234,11 @@ _RANK_CONSUMER_CONTRACTS = [
     # x_etl_global_row_number: per-pid row_number over (ts, event_id)
     # after a range shuffle on the same key; the row number is the output
     ("x_etl_global_row_number", "events", ("ts", "event_id"), ()),
-    # z-order twins: ntile / rank recovery over (zval, l_orderkey,
-    # l_linenumber), output aggregates only (l_partkey, l_suppkey) per
-    # bucket — peers may exist iff identical in those (the sf0.001
-    # fixture has exactly one such fully-duplicated row)
+    # x_etl_zorder_stats: ntile over (zval, l_orderkey, l_linenumber),
+    # output aggregates only (l_partkey, l_suppkey) per bucket — peers may
+    # exist iff identical in those (the sf0.001 fixture has exactly one
+    # such fully-duplicated row)
     ("x_etl_zorder_stats", "lineitem",
-     ("zval", "l_orderkey", "l_linenumber"), ("l_partkey", "l_suppkey")),
-    ("x_etl_zorder_stats_sharded", "lineitem",
      ("zval", "l_orderkey", "l_linenumber"), ("l_partkey", "l_suppkey")),
 ]
 
@@ -956,37 +954,53 @@ def test_read_xlsx_shared_strings_rich_text_runs(strings, data, tmp_path_factory
 )
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_zorder_twins_agree_on_random_tables(spark, n, seed, tmp_path_factory):
-    """x_etl_zorder_stats (single-window ntile) and its distributed twin
-    (range-partitioned rank recovery + the SQL-standard ntile CASE
-    formula) must produce IDENTICAL granule stats on arbitrary random
-    lineitem tables — including n < ZORDER_BUCKETS, where the recovery
-    formula's ELSE branch divides by q = total div buckets = 0 and
-    correctness rests on the THEN branch covering every row (the fixture
-    never exercises that edge; the rank-recovery bug class is the one
-    the operator docstring records catching in construction)."""
+def test_zorder_stats_matches_oracle_on_random_tables(
+    spark, sf_dir, n, seed, tmp_path_factory
+):
+    """x_etl_zorder_stats (single-window ntile) must reproduce its DuckDB
+    oracle's granule stats on arbitrary random lineitem tables —
+    including n < ZORDER_BUCKETS, where ntile leaves buckets empty and
+    every row is its own granule (the fixtures never reach that edge)."""
+    import os
     import random
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from dataengineer_scripts_spark.operators.etl import (
+        _ZORDER_ORACLE,
         x_etl_zorder_stats,
-        zorder_stats_sharded,
     )
+    from dataengineer_scripts_spark.tables import TABLE_NAMES
+    from tests.conftest import make_duck
 
     rng = random.Random(seed)
     # unique (l_orderkey, l_linenumber) keeps the ordering total, the
-    # determinism contract both twins require; zval collisions are free
+    # determinism contract both engines require; zval collisions are free
     rows = [
         (rng.randrange(1 << 16), rng.randrange(1 << 16), i // 7 + 1, i % 7 + 1)
         for i in range(n)
     ]
     d = tmp_path_factory.mktemp("zorder_prop")
-    spark.createDataFrame(
-        rows, "l_partkey long, l_suppkey long, l_orderkey long, l_linenumber long"
-    ).write.mode("overwrite").parquet(f"{d}/lineitem.parquet")
+    cols = ("l_partkey", "l_suppkey", "l_orderkey", "l_linenumber")
+    pq.write_table(
+        pa.table({c: pa.array([r[i] for r in rows], pa.int64())
+                  for i, c in enumerate(cols)}),
+        str(d / "lineitem.parquet"),
+    )
+    # make_duck views every fixture table; only lineitem is random
+    for name in TABLE_NAMES:
+        if name != "lineitem":
+            os.symlink(os.path.abspath(f"{sf_dir}/{name}.parquet"),
+                       d / f"{name}.parquet")
 
-    plain = sorted(map(tuple, x_etl_zorder_stats(spark, str(d)).collect()))
-    sharded = sorted(map(tuple, zorder_stats_sharded(spark, str(d)).collect()))
-    assert plain == sharded
+    got = sorted(map(tuple, x_etl_zorder_stats(spark, str(d)).collect()))
+    con = make_duck(str(d))
+    try:
+        want = sorted(con.execute(_ZORDER_ORACLE).fetchall())
+    finally:
+        con.close()
+    assert got == want
 
 
 # --- streaming/runtime kernels (r14 verdict item 6) --------------------------

@@ -4,6 +4,8 @@ runs sf0.01)."""
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 import pytest
 
 from dataengineer_scripts_spark import registry
@@ -41,6 +43,35 @@ def test_unpartitioned_window_allowlist_is_registered_and_tight():
     unknown = [n for n in UNPARTITIONED_WINDOW_ALLOWLIST if n not in DEFS]
     assert not unknown, f"allowlisted ids not in registry: {unknown}"
     assert all(v >= 1 for v in UNPARTITIONED_WINDOW_ALLOWLIST.values())
+
+
+#: Ids that return one answer on purpose, each group with why it exists.
+#: Any other ids sharing an oracle are two plans for one answer: keep one.
+_SHARED_ORACLE_GROUPS = {
+    frozenset({"exec_sequential", "exec_threadpool", "exec_async",
+               "snk_http_post"}): "the reference's executor generations",
+    frozenset({"src_json_file", "snk_stdout_progress"}):
+        "a source and a sink that both pass nation through",
+    frozenset({"x_src_csv_roundtrip", "x_src_orc_roundtrip"}):
+        "two file formats",
+    frozenset({"x_join_bucketed", "x_join_skew_salted"}):
+        "two join strategies",
+}
+
+
+def test_shared_oracles_are_allowlisted():
+    """Ids whose whitespace-normalized oracle SQL is identical must form
+    exactly one of the allowlisted groups: a new twin plan fails here, and
+    so does a group whose members no longer share an oracle."""
+    by_sql: dict[str, set[str]] = defaultdict(set)
+    for name, qd in DEFS.items():
+        if qd.oracle is not None:
+            by_sql[" ".join(qd.oracle.split())].add(name)
+    shared = {frozenset(ids) for ids in by_sql.values() if len(ids) > 1}
+    unexpected = [sorted(g) for g in shared - _SHARED_ORACLE_GROUPS.keys()]
+    assert not unexpected, f"ids sharing one oracle: {unexpected}"
+    stale = [sorted(g) for g in _SHARED_ORACLE_GROUPS.keys() - shared]
+    assert not stale, f"allowlisted groups that no longer share: {stale}"
 
 
 def test_type_guard_catches_uncast_integer_sum(spark, duck, sf_dir):

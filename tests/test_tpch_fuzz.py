@@ -236,11 +236,11 @@ BROAD_IDS = sorted(
 # so a refactor the resolver cannot follow would silently drop ops from
 # fuzz coverage with no other signal.  A legitimate registry change
 # updates the pin consciously; silent shrinkage fails loudly instead.
-# 138 direct-read ops + x_graph_pagerank and x_etl_global_row_number,
+# 137 direct-read ops + x_graph_pagerank and x_etl_global_row_number,
 # whose reads the r16 direct-only scan missed (helper / line-wrapped
 # table() calls) — recovered by the transitive upgrade, r17.
-assert len(BROAD_IDS) == 140, (
-    f"BROAD_IDS enrollment changed: {len(BROAD_IDS)} != 140 — if the "
+assert len(BROAD_IDS) == 139, (
+    f"BROAD_IDS enrollment changed: {len(BROAD_IDS)} != 139 — if the "
     "registry legitimately grew/shrank, update the pin; if not, a "
     "refactor just silently dropped ops from fuzz coverage"
 )

@@ -29,7 +29,10 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    b = SparkSession.builder.master("local[8]").appName("driver-sim")
+    from dataengineer_scripts_spark.session import CPUS
+
+    # sized from the host like session.py, but vanilla: no engine confs
+    b = SparkSession.builder.master(f"local[{CPUS}]").appName("driver-sim")
     if args.hostile:
         b = b.config("spark.sql.session.timeZone", "America/New_York")
     spark = b.getOrCreate()
