@@ -1920,9 +1920,7 @@ def x_etl_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     + count(distinct col) per column share the scan; Spark plans the
     multi-distinct via a single expand — one table read, not one per
     column), then a stack() projection unpivots the 1-row frame to
-    column rows.  At 100 TB the exact distincts swap for
-    approx_count_distinct (the ``x_agg_approx_distinct`` trade) without
-    changing the shape."""
+    column rows."""
     c = table(spark, sf_dir, "customer")
     agg = c.agg(
         F.count("*").cast("bigint").alias("n_rows"),

@@ -1,6 +1,6 @@
 """LLM-training-data pipeline operators (SURVEY.md §2.9, driver north star):
 deduplication (exact, n-gram Jaccard, MinHash+LSH, SimHash, embedding-cosine),
-similarity search (brute-force cosine top-k; IVF scale path), and text
+similarity search (exact cosine top-k; PQ-compressed top-k), and text
 analysis (language-ID, quality scoring, token counting, fingerprinting) over
 the ``documents`` / ``embeddings`` fixtures.
 
@@ -8,11 +8,11 @@ These have no counterpart in the reference (it contains no text/embedding
 processing — /root/reference is 6 ETL scripts, SURVEY.md §0); they are the
 north-star extension surface from BASELINE.json.
 
-Design notes (100 TB posture):
+Design notes:
 - NO all-pairs cross joins anywhere.  Pair generation is always an
   inverted-index equi-join (shared shingle / shared LSH band / shared
-  simhash chunk / shared IVF cell): only documents that could possibly be
-  similar ever meet in a shuffle.  Bucket keys are uniform hashes → no skew.
+  simhash chunk): only documents that could possibly be similar ever meet
+  in a shuffle.  Bucket keys are uniform hashes → no skew.
 - Higher-order-function expressions (transform/aggregate/zip_with) do NOT
   participate in whole-stage codegen AND get re-inlined by CollapseProject
   into every downstream reference — a 128-hash signature naively built with
@@ -25,10 +25,9 @@ Design notes (100 TB posture):
   aggregation of 128 ``min(xxhash64(shingle, i))`` columns.
 - Exact-Jaccard verification of LSH candidates touches only the candidate
   pairs, never the corpus squared.
-- The brute-force cosine top-k broadcasts the (small) query set and scans
-  the corpus once, partition-parallel; the IVF variant prunes the scan to
-  the probed cells and does the per-cell math vectorized in numpy via
-  ``mapInPandas`` (Arrow batches) — the documented scale path.
+- The exact cosine top-k closes over the (small) query set and scans the
+  corpus once, partition-parallel, doing the math vectorized in numpy via
+  ``mapInPandas`` (Arrow batches).
 - Every float the oracle compares is rounded in BOTH engines (sum order
   under parallelism differs in the last ulp); floats are cast to double
   BEFORE arithmetic on both sides so the math is bit-identical.
@@ -36,7 +35,6 @@ Design notes (100 TB posture):
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 # Module-level so `typing.get_type_hints` can resolve the stringified
@@ -179,8 +177,8 @@ def _pair_jaccard(pairs: DataFrame, sh: DataFrame) -> DataFrame:
 def _exact_text_buckets(df: DataFrame, aggs: dict[str, Column]) -> DataFrame:
     """Phase 1 of the two-phase exact dedup: group on ``xxhash64(text)``
     ALONE, so the corpus-wide exchange carries an 8-byte key plus the
-    partial aggregates and never the text (keyed on raw text, a 100 TB
-    corpus would ship ~its full text volume through the shuffle).  The
+    partial aggregates and never the text (keyed on raw text, the
+    shuffle would carry the whole corpus's text volume).  The
     text is consumed map-side by the hash and pruned before the exchange.
     Exposed separately from :func:`_exact_text_groups` so the plan guard
     can assert the exchange key on the pre-checkpoint lineage
@@ -792,11 +790,8 @@ def x_llm_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     replicated to every A block (measured ~2× faster end-to-end at sf0.1),
     and each unordered pair lands in exactly one cell, so no distinct.
     Memory bound per task: 2n/P vectors — smaller than a broadcast
-    envelope.  At 100 TB the IVF/LSH blocking of ``x_llm_ann_ivf``
-    replaces exhaustive pairing — same math, pruned pair generation
-    (measured, r11 scale stress: this op walks its quadratic asymptote
-    by design — 59x wall at 30x corpus — while ann_ivf/ann_lsh stay
-    flat at 2-2.5 s across 1x-30x; BASELINE.md round-11 addendum).  The
+    envelope.  The work is quadratic in the corpus by design (the
+    answer is every pair over the threshold).  The
     cosine is rounded to 6 decimals BEFORE thresholding on both engines:
     GEMM summation order differs from DuckDB's sequential list_sum fold,
     so an unrounded compare could flip membership of a pair within 1 ulp
@@ -884,8 +879,7 @@ def x_llm_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-join + per-row HOF dot ran the 64-mult fold interpreted per
     candidate row: 5.8 s at sf0.1 vs ~1 s for this form.)  Ranking is on
     the ROUNDED cosine with neighbor_id tiebreak so the order is
-    deterministic in both engines.  Scale path: x_llm_ann_ivf (adds cell
-    pruning to the same shape)."""
+    deterministic in both engines."""
     e = _normalized(spark, sf_dir)
     qrows = sorted(
         e.filter(F.col("vec_id") < KNN_N_QUERIES).collect(), key=lambda r: r.vec_id
@@ -1054,109 +1048,6 @@ def x_llm_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_batch_broadcast(e, queries, KNN_K)
 
 
-IVF_CELLS = 10
-IVF_PROBES = 3
-
-
-@register(
-    "x_llm_ann_ivf",  # approximate by construction → rows-only check
-    why_no_oracle="recall < 1 by design (IVF probe subset)",
-    gate="hash-matched exact-score companion `x_llm_ann_ivf_scores`; "
-         "recall floor vs exact kNN in "
-         "`tests/test_ann_recall.py`",
-)
-def x_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style approximate nearest neighbor — the 100 TB scale path.
-
-    Coarse quantizer: exactly ``IVF_CELLS`` deterministic seed centroids —
-    the vectors with the smallest ``xxhash64(vec_id)`` (a uniform
-    pseudo-random but reproducible sample at ANY corpus size).  The seeds
-    are **collected to the driver as the quantizer model** (IVF_CELLS × dim
-    floats — the IVF analog of trained k-means centroids; a kilobyte, like
-    any broadcast model) and closed over by the assignment pass, so cell
-    assignment is ONE narrow ``mapInPandas`` over the corpus: argmax of the
-    E·Cᵀ GEMM per Arrow batch — no join, no per-vector window, no shuffle.
-    (The previous corpus × centroids broadcast-join + row_number argmin
-    measured 31 s at sf0.1; this form measures ~3 s.)
-
-    Query side: the probe set is tiny (10 queries × 3 probed cells) and is
-    computed in the same driver-side numpy, then **broadcast** against the
-    assigned corpus — the corpus is never shuffled; rows outside probed
-    cells die in the broadcast hash join.  Partial top-k per partition in
-    numpy, final exact top-k over the tiny union of partials.  Approximate
-    (recall < 1 by design) → rows-only driver check; the local pytest
-    asserts recall vs x_llm_knn_cosine."""
-    e = _normalized(spark, sf_dir)
-
-    # Quantizer training (driver-side model, deterministic).
-    seeds = (
-        e.select("vec_id", "e", F.xxhash64("vec_id").alias("hh"))
-        .orderBy("hh", "vec_id")
-        .limit(IVF_CELLS)
-        .collect()
-    )
-    cmat = np.array(
-        [r.e for r in sorted(seeds, key=lambda r: (r.hh, r.vec_id))]
-    )  # row index == cell_id
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            sim = np.round(np.vstack(pdf["e"].to_numpy()) @ cmat.T, 6)
-            # argmax returns the FIRST maximal index → lowest cell_id on
-            # ties (deterministic, matches the rounded-sim/cell-id order).
-            yield pdf.assign(cell_id=sim.argmax(1).astype("int32"))
-
-    assigned = e.mapInPandas(assign, "vec_id long, e array<double>, cell_id int")
-
-    # Probe planning: per query, the IVF_PROBES nearest cells (driver-side
-    # numpy over the tiny query set, broadcast back as (query_id, cell_id,
-    # qe) rows).
-    qrows = sorted(
-        e.filter(F.col("vec_id") < KNN_N_QUERIES).collect(),
-        key=lambda r: r.vec_id,
-    )
-    probe_rows = []
-    for r in qrows:
-        qsim = np.round(np.array(r.e) @ cmat.T, 6)
-        order = np.lexsort((np.arange(len(qsim)), -qsim))  # sim desc, cell asc
-        for cell in order[:IVF_PROBES]:
-            probe_rows.append((int(r.vec_id), int(cell), list(r.e)))
-    probes = local_frame(
-        spark, probe_rows, "query_id long, cell_id int, qe array<double>"
-    )
-    cand = assigned.join(F.broadcast(probes), "cell_id").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-
-    def topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Partition-local partial top-k, vectorized: numpy row-wise dot.
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qe = np.vstack(pdf["qe"].to_numpy())
-            ce = np.vstack(pdf["e"].to_numpy())
-            pdf = pdf.assign(cosine=np.round(np.einsum("ij,ij->i", qe, ce), 6))
-            out = (
-                pdf.sort_values(
-                    ["query_id", "cosine", "vec_id"], ascending=[True, False, True]
-                )
-                .groupby("query_id", sort=False)
-                .head(KNN_K)
-            )
-            yield out[["query_id", "vec_id", "cosine"]]
-
-    partial = cand.mapInPandas(topk, "query_id long, vec_id long, cosine double")
-    # Final exact top-k over the (tiny) union of partial top-ks.
-    w_final = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= KNN_K)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
-    )
-
-
 @register(
     "x_llm_nearest_class",
     oracle="""
@@ -1279,364 +1170,6 @@ def x_llm_nearest_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = se.select("vec_id", "label", F.col("d").alias("e"))
     return vecs.mapInPandas(
         assign, "vec_id long, label int, pred_label int, score double"
-    )
-
-
-LSH_PLANES = 16  # sign bits per vector
-LSH_BANDS = 4  # bands of LSH_PLANES/LSH_BANDS bits each
-LSH_SEED = 42
-
-
-@register(
-    "x_llm_ann_lsh",  # approximate by construction → rows-only check
-    why_no_oracle="recall < 1 by design (LSH bucket subset)",
-    gate="hash-matched companion `x_llm_ann_lsh_scores`; recall floor in "
-         "`tests/test_ann_recall.py`",
-)
-def x_llm_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Random-hyperplane LSH top-k — the bucketed alternative to IVF for
-    approximate similarity search.
-
-    16 fixed hyperplanes (deterministic seed) turn each vector into a
-    16-bit sign signature; signatures split into 4 bands of 4 bits, and a
-    corpus vector is a candidate for a query iff they share ≥ 1 band key
-    (same locality-sensitive bucket).  Plan shape mirrors x_llm_ann_ivf:
-    the plane matrix is a driver-held model closed over by ONE narrow
-    ``mapInPandas`` signature pass; the (query × band) probe set is tiny
-    and **broadcast**, so the corpus is never shuffled; scoring is a
-    partition-local GEMM top-k with a final window over the partial rows.
-    Recall < 1 by design (a true neighbor can disagree on every band) →
-    rows-only driver check; the local pytest asserts recall vs the exact
-    scan.  At 100 TB, band keys replace the IVF cells as the pruning
-    index — same candidate-join geometry, no training step."""
-    rng = np.random.RandomState(LSH_SEED)
-    planes = rng.randn(LSH_PLANES, 64)
-    band_bits = LSH_PLANES // LSH_BANDS
-
-    def band_keys(mat: np.ndarray) -> np.ndarray:
-        bits = (mat @ planes.T) > 0  # n × LSH_PLANES sign bits
-        weights = 1 << np.arange(band_bits)
-        return np.stack(
-            [
-                bits[:, b * band_bits : (b + 1) * band_bits] @ weights
-                for b in range(LSH_BANDS)
-            ],
-            axis=1,
-        )  # n × LSH_BANDS band keys
-
-    e = _normalized(spark, sf_dir)
-
-    def sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            keys = band_keys(np.vstack(pdf["e"].to_numpy()))
-            out = pdf.loc[pdf.index.repeat(LSH_BANDS)].reset_index(drop=True)
-            out["band_id"] = np.tile(np.arange(LSH_BANDS), len(pdf))
-            out["band_key"] = keys.reshape(-1)
-            yield out[["vec_id", "e", "band_id", "band_key"]]
-
-    corpus = e.mapInPandas(
-        sig, "vec_id long, e array<double>, band_id int, band_key int"
-    )
-
-    qrows = sorted(
-        e.filter(F.col("vec_id") < KNN_N_QUERIES).collect(), key=lambda r: r.vec_id
-    )
-    qmat = np.array([r.e for r in qrows])
-    qkeys = band_keys(qmat)
-    probes = local_frame(
-        spark,
-        [
-            (int(r.vec_id), int(b), int(qkeys[i, b]), list(r.e))
-            for i, r in enumerate(qrows)
-            for b in range(LSH_BANDS)
-        ],
-        "query_id long, band_id int, band_key int, qe array<double>",
-    )
-    cand = (
-        corpus.join(F.broadcast(probes), ["band_id", "band_key"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "qe", "vec_id", "e")
-        .dropDuplicates(["query_id", "vec_id"])
-    )
-
-    def topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qe = np.vstack(pdf["qe"].to_numpy())
-            ce = np.vstack(pdf["e"].to_numpy())
-            pdf = pdf.assign(cosine=np.round(np.einsum("ij,ij->i", qe, ce), 6))
-            yield (
-                pdf.sort_values(
-                    ["query_id", "cosine", "vec_id"], ascending=[True, False, True]
-                )
-                .groupby("query_id", sort=False)
-                .head(KNN_K)[["query_id", "vec_id", "cosine"]]
-            )
-
-    partial = cand.mapInPandas(topk, "query_id long, vec_id long, cosine double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KNN_K)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
-    )
-
-
-@register(
-    "x_llm_ann_ivf_scores",
-    oracle=f"""
-    WITH {_SQL_NORMED},
-    cents AS (
-        SELECT vec_id AS cell_id, e AS c FROM normed
-        WHERE vec_id < {IVF_CELLS}
-    ),
-    sim AS (
-        SELECT n.vec_id, c.cell_id,
-               round(list_sum(list_transform(generate_series(1, len(n.e)),
-                     i -> n.e[i] * c.c[i])), 6) AS s
-        FROM normed n CROSS JOIN cents c
-    ),
-    assigned AS (
-        SELECT vec_id, cell_id FROM (
-            SELECT *, row_number() OVER (PARTITION BY vec_id
-                      ORDER BY s DESC, cell_id) AS rn
-            FROM sim)
-        WHERE rn = 1
-    ),
-    probes AS (
-        SELECT vec_id AS query_id, cell_id FROM (
-            SELECT *, row_number() OVER (PARTITION BY vec_id
-                      ORDER BY s DESC, cell_id) AS rn
-            FROM sim WHERE vec_id < {KNN_N_QUERIES})
-        WHERE rn <= {IVF_PROBES}
-    )
-    SELECT p.query_id, a.vec_id AS neighbor_id, a.cell_id,
-           round(list_sum(list_transform(generate_series(1, len(q.e)),
-                 i -> q.e[i] * v.e[i])), 6) AS cosine
-    FROM probes p
-    JOIN assigned a ON a.cell_id = p.cell_id
-    JOIN normed q ON q.vec_id = p.query_id
-    JOIN normed v ON v.vec_id = a.vec_id
-    WHERE a.vec_id <> p.query_id
-    """,
-)
-def x_llm_ann_ivf_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checked companion of ``x_llm_ann_ivf`` (the pq_adc_scores
-    pattern): the FULL exact cosine matrix over the probed cells — every
-    (query, candidate) pair the IVF search would score, with the cell
-    that admitted the candidate — where the top-k op is rows-only
-    (recall < 1 has no SQL twin).  A hash-matched driver row here attests
-    the whole IVF search math end to end: round-6 argmax cell assignment
-    (ties to the lowest cell id), per-query probe planning (top
-    IVF_PROBES cells by rounded sim, cell-id tiebreak), the
-    candidates-in-probed-cells join geometry, and the exact rounded
-    candidate scoring.  The ONE piece not replayed is the production
-    op's xxhash64 seed sample (no DuckDB twin); this companion freezes
-    the quantizer with the SQL-expressible rule ``vec_id < IVF_CELLS``
-    (cell_id = seed vec_id), exactly how pq_adc_scores freezes its
-    codebook — the arithmetic downstream of the frozen model is
-    identical code.
-
-    Plan shape is the production one: the quantizer is a driver-held
-    model closed over by ONE narrow ``mapInPandas`` assignment pass (no
-    join, no shuffle), the tiny probe set broadcasts against the
-    assigned corpus, and scoring is a second narrow pass over the
-    surviving candidates — the corpus itself is never shuffled."""
-    e = _normalized(spark, sf_dir)
-    # ONE bounded model collect covers both driver-held frames (the seed
-    # centroids and the query set are the same low-vec_id prefix) — two
-    # separate collects would each run a full corpus-scan job for the
-    # same handful of rows.
-    model_rows = sorted(
-        e.filter(F.col("vec_id") < max(IVF_CELLS, KNN_N_QUERIES)).collect(),
-        key=lambda r: r.vec_id,
-    )
-    seeds = [r for r in model_rows if r.vec_id < IVF_CELLS]
-    cmat = np.array([r.e for r in seeds])  # row index == cell_id == vec_id
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            sim = np.round(np.vstack(pdf["e"].to_numpy()) @ cmat.T, 6)
-            yield pdf.assign(cell_id=sim.argmax(1).astype("int32"))
-
-    assigned = e.mapInPandas(assign, "vec_id long, e array<double>, cell_id int")
-
-    qrows = [r for r in model_rows if r.vec_id < KNN_N_QUERIES]
-    probe_rows = []
-    for r in qrows:
-        qsim = np.round(np.array(r.e) @ cmat.T, 6)
-        order = np.lexsort((np.arange(len(qsim)), -qsim))  # sim desc, cell asc
-        for cell in order[:IVF_PROBES]:
-            probe_rows.append((int(r.vec_id), int(cell), list(r.e)))
-    probes = local_frame(
-        spark, probe_rows, "query_id long, cell_id int, qe array<double>"
-    )
-    cand = assigned.join(F.broadcast(probes), "cell_id").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qe = np.vstack(pdf["qe"].to_numpy())
-            ce = np.vstack(pdf["e"].to_numpy())
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"],
-                    "neighbor_id": pdf["vec_id"],
-                    "cell_id": pdf["cell_id"],
-                    "cosine": np.round(np.einsum("ij,ij->i", qe, ce), 6),
-                }
-            )
-
-    return cand.mapInPandas(
-        score, "query_id long, neighbor_id long, cell_id int, cosine double"
-    )
-
-
-@register(
-    "x_llm_ann_lsh_scores",
-    oracle=f"""
-    WITH {_SQL_NORMED},
-    planes AS (
-        SELECT vec_id AS p, e AS pe FROM normed
-        WHERE vec_id < {LSH_PLANES}
-    ),
-    bits AS (
-        SELECT n.vec_id, pl.p,
-               CASE WHEN round(list_sum(list_transform(
-                         generate_series(1, len(n.e)),
-                         i -> n.e[i] * pl.pe[i])), 6) > 0
-                    THEN 1 ELSE 0 END AS bit
-        FROM normed n CROSS JOIN planes pl
-    ),
-    keys AS (
-        SELECT vec_id,
-               (p // {LSH_PLANES // LSH_BANDS})::INT AS band_id,
-               sum(bit * (1 << (p % {LSH_PLANES // LSH_BANDS})))::BIGINT
-                   AS band_key
-        FROM bits GROUP BY vec_id, p // {LSH_PLANES // LSH_BANDS}
-    ),
-    cand AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               count(*)::BIGINT AS n_shared_bands
-        FROM keys q JOIN keys c
-          ON q.band_id = c.band_id AND q.band_key = c.band_key
-        WHERE q.vec_id < {KNN_N_QUERIES} AND c.vec_id <> q.vec_id
-        GROUP BY 1, 2
-    )
-    SELECT cand.query_id, cand.neighbor_id, cand.n_shared_bands,
-           round(list_sum(list_transform(generate_series(1, len(q.e)),
-                 i -> q.e[i] * v.e[i])), 6) AS cosine
-    FROM cand
-    JOIN normed q ON q.vec_id = cand.query_id
-    JOIN normed v ON v.vec_id = cand.neighbor_id
-    """,
-)
-def x_llm_ann_lsh_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checked companion of ``x_llm_ann_lsh``: every (query,
-    candidate) pair the banded LSH search admits, with HOW MANY bands
-    matched and the exact rounded cosine — value-level attestation of
-    the sign-signature → band-key packing → bucket-join → scoring
-    pipeline that the top-k op runs rows-only (recall < 1 by design).
-    The ONE piece not replayed is the production op's seeded-randn
-    hyperplane matrix (no DuckDB twin); this companion draws the
-    hyperplanes from the data instead — the first LSH_PLANES normalized
-    corpus vectors — the same model-freezing move as
-    ``x_llm_ann_ivf_scores``.  Sign bits threshold the ROUND-6 dot (a
-    raw double dot could flip sign across engines near zero); band keys
-    pack LSH_PLANES/LSH_BANDS bits little-endian, matching the
-    production op's weight vector.
-
-    Plan shape is the production one: plane matrix is a driver-held
-    model closed over by ONE narrow ``mapInPandas`` signature pass; the
-    (query × band) probe set broadcasts; the per-pair band count is one
-    hash aggregate on the (already tiny) candidate rows and scoring is
-    a final narrow pass — the corpus is never shuffled."""
-    band_bits = LSH_PLANES // LSH_BANDS
-    e = _normalized(spark, sf_dir)
-    # ONE bounded model collect covers both driver-held frames (the
-    # hyperplanes and the query set are the same low-vec_id prefix) —
-    # two separate collects would each run a full corpus-scan job.
-    model_rows = sorted(
-        e.filter(F.col("vec_id") < max(LSH_PLANES, KNN_N_QUERIES)).collect(),
-        key=lambda r: r.vec_id,
-    )
-    prows = [r for r in model_rows if r.vec_id < LSH_PLANES]
-    planes = np.array([r.e for r in prows])  # row index == plane id
-
-    def band_keys(mat: np.ndarray) -> np.ndarray:
-        bits = np.round(mat @ planes.T, 6) > 0  # n × LSH_PLANES sign bits
-        weights = 1 << np.arange(band_bits)
-        return np.stack(
-            [
-                bits[:, b * band_bits : (b + 1) * band_bits] @ weights
-                for b in range(LSH_BANDS)
-            ],
-            axis=1,
-        )
-
-    def sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            keys = band_keys(np.vstack(pdf["e"].to_numpy()))
-            out = pdf.loc[pdf.index.repeat(LSH_BANDS)].reset_index(drop=True)
-            out["band_id"] = np.tile(np.arange(LSH_BANDS), len(pdf))
-            out["band_key"] = keys.reshape(-1)
-            yield out[["vec_id", "e", "band_id", "band_key"]]
-
-    corpus = e.mapInPandas(
-        sig, "vec_id long, e array<double>, band_id int, band_key int"
-    )
-
-    qrows = [r for r in model_rows if r.vec_id < KNN_N_QUERIES]
-    qmat = np.array([r.e for r in qrows])
-    qkeys = band_keys(qmat)
-    probes = local_frame(
-        spark,
-        [
-            (int(r.vec_id), int(b), int(qkeys[i, b]), list(r.e))
-            for i, r in enumerate(qrows)
-            for b in range(LSH_BANDS)
-        ],
-        "query_id long, band_id int, band_key int, qe array<double>",
-    )
-    cand = (
-        corpus.join(F.broadcast(probes), ["band_id", "band_key"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(
-            F.count("*").alias("n_shared_bands"),
-            F.first("qe").alias("qe"),
-            F.first("e").alias("e"),
-        )
-    )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qe = np.vstack(pdf["qe"].to_numpy())
-            ce = np.vstack(pdf["e"].to_numpy())
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"],
-                    "neighbor_id": pdf["vec_id"],
-                    "n_shared_bands": pdf["n_shared_bands"],
-                    "cosine": np.round(np.einsum("ij,ij->i", qe, ce), 6),
-                }
-            )
-
-    return cand.mapInPandas(
-        score,
-        "query_id long, neighbor_id long, n_shared_bands long, cosine double",
     )
 
 
@@ -2084,7 +1617,7 @@ def _two_phase_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     size, INDEPENDENT of diameter (a 1M-node chain converges in ~20
     rounds where label propagation needs 1M sweeps).  Each step is one
     hash aggregate + one equi-join on node keys — the same shuffle shapes
-    as the sweep loop, so the 100 TB posture is unchanged.
+    as the sweep loop.
 
     ``edges``: symmetric directed (src, dst) pairs (both orientations
     present).  Returns (doc_id, cluster_id = component minimum), with
@@ -2237,9 +1770,9 @@ def x_llm_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     than vacuously matching on untouched text.
 
     Everything is JVM-side ``regexp_replace``/``regexp_count`` inside one
-    whole-stage-codegen'd narrow pass — zero shuffle, no Python; at 100 TB
-    this runs at scan speed, which is why scrubbing belongs in built-in
-    regex functions and not a UDF.  Spark compiles the patterns with
+    whole-stage-codegen'd narrow pass — zero shuffle, no Python; it runs
+    at scan speed, which is why scrubbing belongs in built-in regex
+    functions and not a UDF.  Spark compiles the patterns with
     java.util.regex and DuckDB with RE2; the patterns avoid every
     construct the two dialects disagree on (backrefs, lookaround,
     possessives), so replacements are position-identical."""
@@ -2503,10 +2036,9 @@ def x_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``F.avg`` with map-side partial aggregation) collecting only K × dim
     doubles to the driver — the k-means shape that scales to any corpus
     size; the prune is ONE shuffle on cluster_id + per-cluster
-    ``applyInPandas`` pairwise GEMM (cluster-local, upper-triangle).
-    Oversized clusters at 100 TB get the blocked-GEMM treatment of
-    ``x_llm_dedup_embed`` inside the cell — same math, bounded task
-    memory."""
+    ``applyInPandas`` pairwise GEMM (cluster-local, upper-triangle).  One
+    cluster's vectors must fit one task's memory (2,000 vectors over 16
+    clusters at sf0.1)."""
     normed = _normalized(spark, sf_dir)
     crows = sorted(
         normed.filter(F.col("vec_id") < SEMDEDUP_K).collect(),
@@ -2715,9 +2247,9 @@ def x_llm_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ENTIRELY narrow: the trigram array, its ``array_distinct``, and the
     ratio are computed per row inside codegen — zero shuffle, zero
     Python, no explode (the doc's shingle multiset never leaves the
-    row).  At 100 TB this is the cheapest possible filter shape: scan
-    speed, trivially combinable with the other per-doc scores in the
-    same pass."""
+    row).  This is the cheapest possible filter shape: scan speed,
+    trivially combinable with the other per-doc scores in the same
+    pass."""
     # _tri_shingle_array zip_with-pads two trailing nulls (the explode
     # path drops them row-wise); drop them array-side here
     arr = F.filter(_tri_shingle_array(F.col("text")), lambda x: x.isNotNull())
@@ -2952,7 +2484,7 @@ def x_llm_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ENTIRELY narrow: one split, a generated starts array, explode, and a
     per-row slice+join — no shuffle at all (the explode multiplies rows
-    ~n/STRIDE map-side).  At 100 TB this runs at scan speed and its output
+    ~n/STRIDE map-side).  It runs at scan speed and its output
     partitioning inherits the input's, so a downstream embed/tokenize
     stage starts co-located."""
     toks = F.split(F.col("text"), " ")
@@ -3161,7 +2693,7 @@ def x_llm_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs), so map-side combine collapses the Zipf mass before the
     shuffle and the top-K is a ``TakeOrderedAndProject`` heap, never a
     global sort — the identical heavy-hitters posture as
-    ``x_llm_vocab_topk`` and exactly what 100 TB of corpus needs."""
+    ``x_llm_vocab_topk``."""
     tok = (
         table(spark, sf_dir, "documents")
         .select(F.explode(F.split("text", " ")).alias("raw"))
@@ -3326,27 +2858,11 @@ def x_llm_ngram_lm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry no spaces by construction, so the bigram key is a single
     delimited string (one shuffle column, split back only at output).
 
-    Why the w1-partitioned window is acceptable at 100 TB (r09 verdict
-    asked for a bound): one window partition = ONE word's distinct-
-    successor set, whose size is Zipf-distributed — public web-corpus
-    n-gram counts put the head word's successor-type count around
-    10⁵–10⁶ (Google Web 1T), a sub-second single-task sort, three
-    orders below the full-vocabulary single-partition sort that made
-    zipf_fit weak.  (The fixture cannot demonstrate the gap — its
-    synthetic 31-word vocabulary makes every successor set equal the
-    whole vocabulary — so the bound here is the structural one.)  The
-    alternative, groupBy(w1) mass + join-back, would shuffle the
-    bigram table a second time and the |vocab|-row mass frame is far
-    too big to broadcast, so the window is the cheaper plan wherever
-    the successor distribution is non-degenerate.
-
-    Measured once (r11, by a one-off script since deleted — it is in
-    ``tools/`` at commit 6ed30ed — on a synthetic bigram table whose
-    head word carries N successors, through this exact
-    window+projection shape): N=10^6 runs in ~1.3 s, a pathological
-    N=10^7 in ~6.2 s.  The bound holds with an order of headroom over
-    public web-corpus head sizes; the zipf two-level rank remains the
-    escape hatch if a corpus ever presents a >=10^8 successor set."""
+    Why the w1-partitioned window is bounded: one window partition is ONE
+    word's distinct-successor set, at most the vocabulary (31 words in
+    the synthetic fixture).  The alternative, groupBy(w1) mass +
+    join-back, would shuffle the bigram table a second time, so the
+    window is the cheaper plan."""
     ws = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
     pairs = (
         table(spark, sf_dir, "documents")
@@ -3431,10 +2947,10 @@ def x_llm_lm_doc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the model side collapses to 500 rows (hash agg +
     TakeOrderedAndProject with a total ``(count desc, p)`` order so the
     boundary of the top-K is deterministic on both engines) and is
-    explicitly ``F.broadcast`` — at 100 TB the corpus-sized probe side
-    streams through a broadcast hash join with ZERO shuffle of the
-    documents; the per-doc rollup then aggregates map-side.  Short docs
-    (< 2 words) keep a row via the empty-array ``explode_outer`` guard —
+    explicitly ``F.broadcast`` — the corpus-sized probe side streams
+    through a broadcast hash join with ZERO shuffle of the documents;
+    the per-doc rollup then aggregates map-side.  Short docs (< 2 words)
+    keep a row via the empty-array ``explode_outer`` guard —
     ``sequence(1, size-1)`` alone would count DOWN for 1-word docs and
     fabricate pairs."""
     ws = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
@@ -3649,15 +3165,15 @@ def x_llm_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Product quantization (ANN toolbox: IVF + LSH + PQ)
+# Product quantization
 # ---------------------------------------------------------------------------
 
 #: PQ geometry: split each embedding into PQ_M contiguous subspaces and
 #: code each subvector against PQ_K codebook entries.  The codebook is
 #: DETERMINISTIC (the subvectors of the first PQ_K vec_ids), same seeding
 #: convention as SemDeDup's centroids, so a SQL oracle can replay the
-#: encoding exactly — PQ *encoding* is a pure argmin, unlike IVF *search*
-#: whose recall<1 forces a rows-only check.
+#: encoding exactly — PQ *encoding* is a pure argmin, unlike ADC *search*
+#: (``x_llm_pq_adc_topk``) whose recall<1 forces a rows-only check.
 PQ_M = 8
 PQ_K = 16
 
@@ -3702,10 +3218,8 @@ def x_llm_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization encoding (Jégou et al. 2011): each embedding
     becomes PQ_M one-byte-ish codes — argmin-distance codebook entry per
     contiguous subspace — plus the total quantization error.  64-dim
-    float vectors compress 32× (8 codes vs 64 floats); together with
-    ``x_llm_ann_ivf`` (coarse cells) and ``x_llm_ann_lsh`` this completes
-    the standard ANN index toolbox, and the codes table is exactly what
-    an IVF-PQ index stores per posting.
+    float vectors compress 32× (8 codes vs 64 floats); the codes table
+    is what ``x_llm_pq_adc_topk`` searches.
 
     Determinism for the oracle: subvector distances are computed on
     doubles and rounded to 6 BEFORE the argmin (summation order inside a
@@ -3721,11 +3235,9 @@ def x_llm_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     split on '-'; ``x_llm_pq_adc_topk`` re-encodes from floats anyway.
 
     Plan: the codebook is a driver-held model (PQ_M × PQ_K × subdim
-    doubles — KBs, the IVF-quantizer pattern); encoding is ONE narrow
+    doubles — KBs, the broadcast-model pattern); encoding is ONE narrow
     ``mapInPandas`` pass over the corpus — vectorized (n × K) distance
-    GEMMs per subspace inside each Arrow batch, zero shuffle, zero join.
-    At 100 TB the codes table is appended per-batch; re-encoding never
-    touches old rows because the codebook is frozen by construction."""
+    GEMMs per subspace inside each Arrow batch, zero shuffle, zero join."""
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("e"),
@@ -3776,7 +3288,7 @@ def x_llm_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
          "`tests/test_ann_recall.py`",
 )
 def x_llm_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ADC top-k search over PQ codes (the query half of an IVF-PQ index):
+    """ADC top-k search over PQ codes (the query half of a PQ index):
     corpus vectors are PQ-encoded in NORMALIZED space (codebook = the
     first PQ_K normalized vectors' subvectors), and each query scores a
     candidate as the sum of per-subspace lookup-table entries
@@ -3784,10 +3296,9 @@ def x_llm_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate of the cosine, never touching the original floats at query
     time.
 
-    Rows-only by design, like ``x_llm_ann_ivf``/``x_llm_ann_lsh``: ADC
-    is an approximation (quantization error shifts ranks), so the gate is
-    the recall floor + exact output shape asserted in
-    ``tests/test_ann_recall.py`` against the exact scan.  The fixture's
+    Rows-only by design: ADC is an approximation (quantization error shifts
+    ranks), so the gate is the recall floor + exact output shape asserted
+    in ``tests/test_ann_recall.py`` against the exact scan.  The fixture's
     near-orthogonal random vectors are the worst case for a 16-entry
     codebook; real clustered embeddings recall far higher.
 
@@ -3795,9 +3306,7 @@ def x_llm_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     KBs closed over by ONE narrow ``mapInPandas`` pass (encode the Arrow
     batch, gather LUT entries, partition-local top-k); only
     (partitions × queries × k) partial rows reach the final ranking
-    window.  The corpus is scanned once, never joined or shuffled — at
-    100 TB the codes would be precomputed by ``x_llm_embed_pq`` and this
-    pass reads 8 bytes per vector instead of 256."""
+    window.  The corpus is scanned once, never joined or shuffled."""
     e = _normalized(spark, sf_dir)
     seeds = sorted(
         e.filter(F.col("vec_id") < PQ_K).collect(), key=lambda r: r.vec_id
@@ -3934,7 +3443,7 @@ def x_llm_pq_adc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``T[m][k] = q_m · c_{m,k}`` is pinned to ``floor(t·1e6 + 0.5)``
     BEFORE summation, so the reported score is exact BIGINT math in both
     engines (the err_micro mitigation applied to scores).  A hash-matched
-    driver row here attests the whole IVF-PQ query shape — driver-held
+    row here attests the whole PQ query shape — driver-held
     codebook + LUTs, ONE narrow ``mapInPandas`` corpus pass, no join, no
     shuffle below the aggregate — while the top-k op keeps its recall
     gate in ``tests/test_ann_recall.py``.
@@ -4114,8 +3623,8 @@ def x_llm_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exploded corpus LEFT-joined against the BROADCAST V-row vocab,
     re-aggregated per doc_id with map-side combine.  The explode never
     shuffles — the only data-sized exchange is the per-doc count
-    aggregate, keyed the same as every other per-doc op.  At 100 TB the
-    vocab is KBs; the corpus passes once."""
+    aggregate, keyed the same as every other per-doc op.  The vocab is
+    KBs; the corpus passes once."""
     w = (
         table(spark, sf_dir, "documents")
         .select("doc_id", F.explode(F.split("text", " ")).alias("w"))
@@ -4186,10 +3695,9 @@ def x_llm_embed_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexploded (label, dim) frame — map-side combine collapses each task
     to labels × dim partial sums, so the explode never shuffles raw rows
     — and collects labels × dim doubles (KBs; the bounded-model pattern
-    of IVF/PQ).  Phase 2 scores the corpus in ONE narrow ``mapInPandas``
+    of PQ).  Phase 2 scores the corpus in ONE narrow ``mapInPandas``
     pass with the broadcast centroid matrix: vectorized per-batch GEMM,
-    zero joins, zero shuffles.  At 100 TB phase 1 reduces to KBs on the
-    wire and phase 2 runs at scan speed."""
+    zero joins, zero shuffles."""
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
@@ -4337,10 +3845,9 @@ def x_llm_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: unigram and bigram counts are two hash aggregates over the
     scan-side explode (map-side combinable); totals are a broadcast
-    1-row frame (the hot-cap n_docs pattern); the unigram re-joins hash
-    vocabulary-sized tables; the cut is TakeOrdered, never a global
-    sort.  At 100 TB everything after the two count aggregates is
-    vocabulary-scale."""
+    1-row frame; the unigram re-joins hash vocabulary-sized tables; the
+    cut is TakeOrdered, never a global sort.  Everything after the two
+    count aggregates is vocabulary-scale."""
     ws = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
     docs = table(spark, sf_dir, "documents").select(ws.alias("ws"))
     uni = (
@@ -4537,10 +4044,8 @@ def flagship_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: a single aggregate over the token-counted scan computes every
     count/distinct/extreme together (Catalyst plans the three DISTINCTs
     via expand, one shuffle); the top-language row is a 1-row broadcast
-    from a lang-grain aggregate.  At 100 TB the expand triples the
-    shuffle rows — if that ever dominates, split the distincts into
-    three parallel aggregates and cross-join the 1-row results; the
-    single-statement form is kept here because the card is recomputed
+    from a lang-grain aggregate.  The expand triples the shuffle rows;
+    the single-statement form is kept because the card is recomputed
     rarely and clarity wins."""
     tok = rebalanced(table(spark, sf_dir, "documents")).select(
         "doc_id",
@@ -4598,9 +4103,8 @@ def x_llm_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one aggregate with a distinct-on-text inside: Spark expands
     to the standard two-level plan (partial distinct on (source, text),
     then the final counts) — both levels hash aggregates, map-side
-    combinable.  At 100 TB the text key would be xxhash64(text) first
-    (the exact-dedup two-phase trick); the fixture compares raw text so
-    the oracle is byte-exact."""
+    combinable.  The distinct key is the raw text, so the count is
+    byte-exact against the oracle."""
     return (
         table(spark, sf_dir, "documents")
         .groupBy("source")

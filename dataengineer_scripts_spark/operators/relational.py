@@ -3,7 +3,7 @@
 extension surface (join family, agg family, windows, top-k, set ops,
 array functions, pandas-UDF surface).
 
-Design notes (100 TB posture):
+Design notes:
 - Dimension sides of joins are broadcast (`F.broadcast`) — region/nation/
   customer/supplier/part are dims in this star schema; fact-fact joins go
   through AQE-managed shuffle with skew-join splitting enabled (session.py).
@@ -180,8 +180,8 @@ def flt_key_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row keyed fetch loop (app.py:115-217) = left-outer equi join;
-    the dim side is broadcast — the 100 TB plan is a broadcast hash join,
-    no shuffle of the fact table."""
+    the dim side is broadcast — a broadcast hash join, no shuffle of the
+    fact table."""
     orders = table(spark, sf_dir, "orders")
     customer = table(spark, sf_dir, "customer")
     return orders.join(
@@ -519,52 +519,6 @@ def x_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p.join(F.broadcast(bands), cond).select("p_partkey", "band")
 
 
-@register(
-    "x_join_bucketed",
-    oracle="""
-    SELECT o_orderkey, o_custkey, c_name
-    FROM orders JOIN customer ON o_custkey = c_custkey
-    """,
-)
-def x_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-located (bucketed) join — the shuffle-elimination lever for
-    repeated fact-fact joins at 100 TB: both sides are written bucketed +
-    sorted on the join key (8 buckets here; thousands on a cluster), so
-    the join plan has ZERO Exchange — every bucket pair joins locally
-    (asserted by tests/test_plans.py).  The bucketed write costs one
-    shuffle ONCE; every subsequent join on that key rides for free — the
-    right trade whenever a key is joined more often than written."""
-    import os
-
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".tmp",
-        "bucketed",
-    )
-    for name, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
-        tbl = f"bkt_{name}_{tag}"
-        if not spark.catalog.tableExists(tbl):
-            (
-                table(spark, sf_dir, name)
-                .write.mode("overwrite")
-                .option("path", os.path.join(base, tbl))
-                .bucketBy(8, key)
-                .sortBy(key)
-                .format("parquet")
-                .saveAsTable(tbl)
-            )
-    o = spark.table(f"bkt_orders_{tag}")
-    c = spark.table(f"bkt_customer_{tag}")
-    # merge hint: at fixture scale the planner would (correctly) broadcast
-    # the small side and skip bucketing; this operator exists to exercise
-    # the co-located sort-merge path, which is the shape that matters when
-    # BOTH sides are fact-sized.
-    return o.join(c.hint("merge"), o.o_custkey == c.c_custkey).select(
-        "o_orderkey", "o_custkey", "c_name"
-    )
-
-
 def salted_join(
     fact: DataFrame,
     dim: DataFrame,
@@ -670,10 +624,8 @@ def x_agg_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style continuous-aggregate rollup: the DAILY aggregate is
     computed FROM the HOURLY aggregate, not from raw rows — the
     TimescaleDB/materialized-rollup pattern where each resolution
-    reaggregates the finer one.  At 100 TB the hourly layer is the
-    materialized continuous aggregate (incrementally maintained per
-    arriving partition); the daily/weekly layers reaggregate ~24×/7× fewer
-    rows instead of rescanning the hypertable.  `n_hours` (count of hourly
+    reaggregates the finer one: the daily layer reaggregates ~24× fewer
+    rows instead of rescanning the raw events.  `n_hours` (count of hourly
     partials per day) proves the intermediate resolution exists.  The
     oracle aggregates raw rows directly, so the rollup must agree with the
     one-level sum exactly — which double addition does NOT guarantee
@@ -758,22 +710,6 @@ def x_agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table(spark, sf_dir, "orders").groupBy("o_orderpriority").agg(
         F.countDistinct("o_custkey").alias("n_custs"),
         F.count("*").alias("n_orders"),
-    )
-
-
-@register(
-    "x_agg_approx_distinct",  # approx: engine-specific HLL → rows-only
-    why_no_oracle="HLL++ estimate is engine-specific",
-    gate="exact twin `x_agg_count_distinct` (identical grouping); "
-         "rsd envelope gated in `tests/test_warehouse.py::"
-         "test_approx_distinct_within_rsd_envelope_of_exact_twin`",
-)
-def x_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate distinct (HyperLogLog++, rsd 5%) — the 100 TB path for
-    distinct counts; sketch values are engine-specific so the driver runs
-    the rows-only check (a local test asserts the 5% envelope vs exact)."""
-    return table(spark, sf_dir, "orders").groupBy("o_orderpriority").agg(
-        F.approx_count_distinct("o_custkey").alias("approx_custs")
     )
 
 
@@ -887,10 +823,9 @@ def x_win_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x_agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles per group (`F.percentile` ≡ SQL
     PERCENTILE_CONT ≡ DuckDB quantile_cont).  Exact percentile is a
-    sort-based aggregate (per-group value buffers); at 100 TB prefer
-    `approx_percentile` (t-digest sketch, bounded state, map-side partials)
-    unless exactness is contractual — the registered
-    `x_agg_approx_distinct` op shows the sketch-side pattern."""
+    sort-based aggregate (per-group value buffers): one shuffle on the
+    group key, then each group's values are held and sorted; with three
+    return flags that is three buffers of a few thousand doubles."""
     li = table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.percentile("l_quantity", F.lit(0.25)), 4).alias("p25"),
@@ -1189,10 +1124,9 @@ def x_join_multiway_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet scans, and the join strategy is deliberately left to
     Catalyst/AQE: no broadcast hints, because the right answer is
     size-dependent (at fixture scale AQE broadcasts the filtered customer
-    and orders sides — shuffle-free; at 100 TB the same declarative plan
-    degrades gracefully to shuffle joins on the join keys, with the
-    aggregate reusing lineitem's l_orderkey partitioning).  The top-10 is
-    TakeOrderedAndProject (per-partition heaps), never a global sort.
+    and orders sides — shuffle-free; on larger inputs the same
+    declarative plan falls back to shuffle joins on the join keys).  The
+    top-10 is TakeOrderedAndProject (per-partition heaps), never a global sort.
     Revenue terms are double-multiplied (elementwise, deterministic) then
     summed as DECIMAL(30,10) — decimal addition associates, so the
     grouped sum is bit-equal across engines and partitionings; tie-break
@@ -1237,13 +1171,12 @@ def x_agg_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag) via ``approx_percentile`` — Spark's Greenwald-Khanna sketch:
     mergeable partial state, so the plan is ONE map-side-partial hash
     aggregate regardless of data size, where exact percentiles need a
-    full sort (or one shuffle + per-key sort) of every value.  At 100 TB
-    the sketch is the only sane plan; rank error is bounded by
-    n/accuracy.  No cross-engine oracle (DuckDB's approx_quantile is a
-    t-digest — a different sketch with different value selection);
-    tests/test_warehouse.py gates every
-    reported quantile against the exact percentile within the sketch's
-    rank-error envelope."""
+    full sort (or one shuffle + per-key sort) of every value.  Rank error is
+    bounded by n/accuracy.  No cross-engine oracle (DuckDB's
+    approx_quantile is a t-digest — a different sketch with different
+    value selection); tests/test_warehouse.py gates every reported
+    quantile against the exact percentile within the sketch's rank-error
+    envelope."""
     return (
         table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -1366,7 +1299,7 @@ def x_agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot (long→wide): per-user event counts spread into one column
     per event type — the feature-matrix shape every activity model and
     BI export wants.  The spread values are PINNED (a data-dependent
-    value set would need a whole extra distinct-scan job over 100 TB
+    value set would need a whole extra distinct-scan job over the events
     just to learn the column names, and one skewed/typo'd row would add
     a column), and absent combinations surface as 0, not null.
 
@@ -1568,50 +1501,6 @@ def x_sub_exists_other(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: HLL sketch precision (lgConfigK): 12 → ~1.6% relative standard error,
-#: the usual storage/accuracy trade for user-count sketches.
-HLL_LG_K = 12
-
-
-@register(
-    "x_agg_hll_merge",  # sketch estimate → rows-only (no DuckDB twin)
-    why_no_oracle="sketch bytes are engine-specific",
-    gate="hash-matched exact companion `x_agg_hll_merge_exact` "
-         "on identical keys; error envelope "
-         "gated in `tests/test_warehouse.py::"
-         "test_hll_merge_estimate_within_error_envelope`",
-)
-def x_agg_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable distinct-count maintenance (DataSketches HLL): build ONE
-    sketch per (day, event_type) — the granularity a warehouse persists —
-    then roll up to per-type totals by UNIONING sketches, never re-reading
-    events.  This is the incremental shape exact count-distinct cannot
-    give you: at 100 TB, per-day sketches are built once as each
-    partition lands (KBs per group), and any rollup window (week, month,
-    all-time, ad-hoc segment union) is an aggregate over sketch bytes.
-
-    Accuracy is gated in ``tests/test_warehouse.py``: the merged estimate
-    must stay within HLL's error envelope of the exact distinct count.
-    Rows-only here because the sketch estimate has no cross-engine twin
-    (same policy as ``x_agg_approx_distinct``)."""
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            F.date_trunc("day", F.col("ts")).alias("day"), "event_type"
-        )
-        .agg(F.expr(f"hll_sketch_agg(user_id, {HLL_LG_K})").alias("sk"))
-    )
-    return (
-        daily.groupBy("event_type")
-        .agg(
-            F.expr("hll_sketch_estimate(hll_union_agg(sk, false))")
-            .cast("bigint")
-            .alias("est_users"),
-            F.count("*").cast("bigint").alias("n_daily_sketches"),
-        )
-    )
-
-
 @register(
     "x_agg_hll_merge_exact",
     oracle="""
@@ -1627,17 +1516,11 @@ def x_agg_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x_agg_hll_merge_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT twin of ``x_agg_hll_merge``, keyed identically: per-day
-    partial dedup of (day, event_type, user_id) — the relational shape a
-    daily HLL sketch materializes — rolled up to exact per-type distinct
-    users and day counts.  ``x_agg_hll_merge``'s sketch estimate has no
-    cross-engine oracle (rows-only driver check), so this companion is
-    the family's hash-matched attestation: it drives the SAME two-level
-    scan→daily-dedup→rollup plan through the value-level gate, while the
-    sketch op's accuracy is separately gated against this exact answer in
-    ``tests/test_warehouse.py``.  At scale the exact twin is the audit
-    query you run on a sampled partition to validate the sketch pipeline;
-    the sketch remains the incremental-maintenance path."""
+    """Per event type, the exact number of distinct users and of days
+    with any event.  Plan: one distinct over (day, event_type, user_id)
+    — the daily partial dedup — then a per-type rollup with two exact
+    distinct counts, so the rollup reads the deduped rows, not the raw
+    events."""
     daily = (
         table(spark, sf_dir, "events")
         .select(
@@ -1712,15 +1595,15 @@ def x_join_fuzzy_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked fuzzy (edit-distance) matching — the entity-resolution
     primitive: DISTINCT part names within Levenshtein FUZZY_MAX_DIST of
     each other, with each name's row count carried along so a resolver
-    can merge the entities.  Two scale decisions make this survive
-    100 TB: (1) the match runs over the DISTINCT-name vocabulary (one
-    hash aggregate first), so output and pair work are vocabulary²-
-    bounded, not row² — matching raw rows would emit every duplicate ×
-    duplicate combination and grow quadratically with data size; (2)
-    candidates are generated only within a blocking key (the last name
-    token ≈ the entity type), so the per-block distance computation
-    never goes vocabulary × vocabulary either.  Skewed blocks get the
-    salting treatment of ``x_join_skew_salted``."""
+    can merge the entities.  Two decisions bound the work: (1) the match runs
+    over the DISTINCT-name vocabulary (one hash aggregate first), so
+    output and pair work are vocabulary²-bounded, not row² — matching raw
+    rows would emit every duplicate × duplicate combination and grow
+    quadratically with data size; (2) candidates are generated only within
+    a blocking key (the last name token ≈ the entity type), so the
+    per-block distance computation never goes vocabulary × vocabulary
+    either.  Skewed blocks get the salting treatment of
+    ``x_join_skew_salted``."""
     names = (
         table(spark, sf_dir, "part")
         .groupBy("p_name")
@@ -1770,8 +1653,7 @@ def x_agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bin edges are PINNED constants: deriving them from data would cost a
     min/max pre-pass over the corpus before the real aggregation; with
     fixed edges this is ONE hash aggregate whose map-side partial
-    collapses each task to at most HIST_N_BINS rows, the cheapest
-    distribution summary that exists at 100 TB.  The exact per-bin
+    collapses each task to at most HIST_N_BINS rows.  The exact per-bin
     min/max double as the evidence a reader needs to refine edges for a
     second pass."""
     bin_ = F.least(
@@ -1886,8 +1768,8 @@ def x_agg_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: three filtered min-aggregates chained by user_id equi-joins —
     every shuffle hashes user_id, so AQE reuses one exchange layout; each
-    stage's frame shrinks monotonically (funnels only narrow).  At 100 TB
-    the stage-1 aggregate dominates and is a map-side-combinable min;
+    stage's frame shrinks monotonically (funnels only narrow).  The
+    stage-1 aggregate dominates and is a map-side-combinable min;
     nothing ever sorts or windows the event log.
 
     Session-shared with ``flagship_analytics`` (its `funnel` metric):
@@ -1963,7 +1845,7 @@ def x_agg_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell rollup reuse that key until the last cells-sized aggregate —
     AQE chains one exchange layout through the whole query, and the
     per-user frames are weeks-bounded (≤ a few rows each) regardless of
-    event volume.  At 100 TB the first dedup dominates and is map-side
+    event volume.  The first dedup dominates and is map-side
     combinable.
 
     Session-shared with ``flagship_analytics`` (its `retention` metric):
@@ -2032,8 +1914,8 @@ def x_win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: ONE hash exchange on user_id + an intra-partition sort —
     identical shuffle shape to the sessionize window, so AQE shares the
     layout when composed; the frame aggregates stream over the sorted
-    run.  At 100 TB this is a single wide stage with per-user state
-    bounded by the hour's event count."""
+    run: a single wide stage with per-user state bounded by the hour's
+    event count."""
     # integer floor-div like the oracle's epoch_us // 1000000 — a double
     # division could truncate one low on values that round just under
     sec = F.expr("unix_micros(ts) div 1000000")
@@ -2093,11 +1975,9 @@ def x_agg_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     that actually occur (the fixture's observed range), and day indices
     are integer diffs from the pinned epoch (the retention convention).
 
-    At 100 TB: dedup of (user, day) is the dominant aggregate and is
-    map-side combinable; the 7× cover explode multiplies the DEDUPED
-    frame, not raw events.  Measured (r12 stress): 3.5x wall at 30x
-    events, output constant at the day grain —
-    `scale_stress_r12_x30.json`.
+    Dedup of (user, day) is the dominant aggregate and is map-side
+    combinable; the 7× cover explode multiplies the DEDUPED frame, not
+    raw events.
 
     Session-shared with ``flagship_analytics`` (its `wau` metric): one
     build per session, lineage exposed as ``_rolling_distinct_build``."""
@@ -2176,9 +2056,7 @@ def x_join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     over ONE user_id shuffle, purchases sorting before coincident errors
     — plus a codegen'd gap filter; the gap is reported in integer
     seconds via ``unix_micros`` floor-division, exact in both engines.
-    The tolerance does not change the plan, only the filter: at 100 TB
-    it additionally enables partition pruning of the probe side to the
-    tolerance horizon when the table is time-partitioned."""
+    The tolerance does not change the plan, only the filter."""
     e = table(spark, sf_dir, "events")
     is_purchase = F.col("event_type") == "purchase"
     w = (
@@ -2777,11 +2655,8 @@ def x_join_scd2_pointintime(spark: SparkSession, sf_dir: str) -> DataFrame:
     the order date applies), then facts filter out.  ONE shuffle on the
     key — versus the naive range join (fact × every version, then
     max-filter) which doubles the fact shuffle and risks BNL on the
-    range predicate.  At 100 TB the union's dim side is version-count-
-    sized, a rounding error against the fact stream.  Measured (r12
-    stress, orders ×30 deepening facts per dimension key): 1.2x wall at
-    30x facts, joined rows exactly 30x (150k -> 4.5M) —
-    `scale_stress_r12_x30.json`."""
+    range predicate.  The union's dim side is version-count-sized, small
+    against the fact stream."""
     c = table(spark, sf_dir, "customer")
     v1 = c.select(
         F.col("c_custkey").alias("k"),
@@ -3033,9 +2908,7 @@ def x_agg_bool_logic(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x_agg_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audience-overlap matrix: for every pair of event types, the
     exact distinct-user intersection and Jaccard — the
-    campaign/feature-overlap question ('do purchasers also click?')
-    and the exact ground truth the sketch-based path
-    (``x_agg_hll_merge``'s union algebra) approximates at 100 TB.
+    campaign/feature-overlap question ('do purchasers also click?').
 
     Plan: the market-basket shape on users — DISTINCT (user, type)
     FIRST (one hash aggregate), so the self-join is quadratic only in a
@@ -3043,9 +2916,7 @@ def x_agg_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes are a types-sized frame joined broadcast; one final pair
     aggregate.  The deduped frame is localCheckpointed — it feeds the
     sizes and both join sides, and without the barrier each consumer
-    would re-scan events.  Measured (r12 stress): 2.1x wall at 30x
-    events, output constant at the type-pair grain —
-    `scale_stress_r12_x30.json`."""
+    would re-scan events."""
     # ut feeds THREE consumers (sizes + both join sides): materialize the
     # deduped frame once (keep_best's localCheckpoint pattern) so events
     # is scanned a single time, not once per consumer

@@ -1,9 +1,9 @@
 """SparkSession construction tuned for this engine.
 
-Local test posture: one JVM, ``local[N]`` threads, shuffle partitions sized
-to cores (not the 200 default).  Cluster posture (100 TB): the same builder
-minus master/memory overrides — AQE, skew-join handling and broadcast
-thresholds are the scale levers and are on by default here.
+One JVM per process, ``local[N]`` threads sized to the host, shuffle
+partitions sized to cores (not the 200 default).  AQE is on, so at the
+fixtures' sizes small shuffles coalesce and small join sides broadcast at
+runtime.
 """
 
 from __future__ import annotations

@@ -1,8 +1,8 @@
-"""ANN quality gates: both approximate paths (IVF cells, LSH bands) must
-return full top-k shape and achieve meaningful recall against the exact
-scan.  The fixture embeddings are near-orthogonal random vectors — the
-hardest case for locality pruning — so the floors are deliberately modest;
-on real clustered embeddings both paths recall far higher."""
+"""PQ search quality gates: the ADC top-k (``x_llm_pq_adc_topk``) must
+return the full top-k shape and a recall floor against the exact scan, and
+its oracle-checked score companion must agree with it.  The fixture
+embeddings are near-orthogonal random vectors — the worst case for a
+16-entry codebook — so the floor is deliberately modest."""
 
 from __future__ import annotations
 
@@ -19,11 +19,10 @@ def _pairs(df):
 
 @pytest.mark.parametrize(
     "name,floor",
-    [("x_llm_ann_ivf", 0.5), ("x_llm_ann_lsh", 0.25),
-     # ADC over a 16-entry codebook on worst-case random vectors: rank
-     # shifts from quantization error dominate; measured 0.18-0.28
-     # across sf0.001-0.1
-     ("x_llm_pq_adc_topk", 0.1)]
+    # ADC over a 16-entry codebook on worst-case random vectors: rank
+    # shifts from quantization error dominate; measured 0.18-0.28
+    # across sf0.001-0.1
+    [("x_llm_pq_adc_topk", 0.1)]
 )
 def test_ann_recall_vs_exact(spark, sf_dir, name, floor):
     exact = _pairs(DEFS["x_llm_knn_cosine"].fn(spark, sf_dir))

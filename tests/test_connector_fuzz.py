@@ -2,11 +2,10 @@
 
 The effectful ops (``snk_*`` / ``src_*`` / ``exec_*`` / ``flagship_sync``)
 are deliberately excluded from the warehouse broad batch (server/Derby/
-tmp-artifact churn), and three more oracle ops (``flagship_analytics``,
-``x_join_bucketed``, ``x_sql_text_api``) fall outside it because the
-transitive read resolver cannot follow registry-composition /
-saveAsTable / temp-view indirection.  Until this file, all of them had
-FIXTURE-ONLY parity evidence.
+tmp-artifact churn), and two more oracle ops (``flagship_analytics``,
+``x_sql_text_api``) fall outside it because the transitive read resolver
+cannot follow registry-composition / temp-view indirection.  Until this
+file, all of them had FIXTURE-ONLY parity evidence.
 
 The key observation making them fuzzable: the whole REST surface derives
 from ``nation`` — the stub API's node listing is seeded from it and every
@@ -69,19 +68,16 @@ CONNECTOR_IDS = [
     "src_rest_auth",
     "src_rest_get",
     "src_rest_limit_push",
-    "x_join_bucketed",
     "x_sql_text_api",
     "x_stream_rest_poll",
 ]
 
 #: Rows-only warehouse readers smoked here (no oracle → no comparator):
-#: the approx sketches and the styled-Excel artifact writer, none of
-#: which any other fuzz batch executes on random inputs.
+#: the approx-quantile sketch and the styled-Excel artifact writer,
+#: neither of which any other fuzz batch executes on random inputs.
 ROWS_ONLY_CONNECTOR_IDS = [
     "snk_excel_styled",
-    "x_agg_approx_distinct",
     "x_agg_approx_quantile",
-    "x_agg_hll_merge",
 ]
 
 

@@ -54,13 +54,6 @@ def test_flagship_is_single_shuffle(spark, sf_dir):
     assert plan.count("Exchange") == 1  # one hash-partition on user_id
 
 
-def test_bucketed_join_has_no_shuffle(spark, sf_dir):
-    plan = _physical(DEFS["x_join_bucketed"].fn(spark, sf_dir))
-    assert "Exchange" not in plan  # co-located buckets join locally
-    assert "SortMergeJoin" in plan
-    assert "SelectedBucketsCount: 8 out of 8" in plan
-
-
 def test_no_cartesian_in_pair_generation(spark, sf_dir):
     # Pair generation must never cross or nested-loop the corpus against
     # itself.
@@ -81,24 +74,6 @@ def test_knn_batch_never_shuffles_the_corpus(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
     # the one Exchange must sit ABOVE the python map (partials, not corpus)
     assert plan.index("Exchange") < plan.index("MapInPandas")
-
-
-def test_ann_score_companions_never_shuffle_the_corpus(spark, sf_dir):
-    # The r10 oracle companions must keep the production ANN geometry:
-    # probe set broadcasts (BroadcastHashJoin), corpus flows through
-    # narrow mapInPandas passes — no corpus-sized hash exchange.  IVF
-    # has none at all; LSH gets exactly one for the tiny per-pair
-    # band-count aggregate (candidate rows, not corpus rows).
-    ivf = _physical(DEFS["x_llm_ann_ivf_scores"].fn(spark, sf_dir))
-    assert "BroadcastHashJoin" in ivf
-    assert ivf.count("Exchange hashpartitioning") == 0
-    assert "CartesianProduct" not in ivf
-    assert "BroadcastNestedLoopJoin" not in ivf
-    lsh = _physical(DEFS["x_llm_ann_lsh_scores"].fn(spark, sf_dir))
-    assert "BroadcastHashJoin" in lsh
-    assert lsh.count("Exchange hashpartitioning") == 1
-    assert "CartesianProduct" not in lsh
-    assert "BroadcastNestedLoopJoin" not in lsh
 
 
 def test_whole_stage_codegen_on_scalar_layer(spark, sf_dir):
@@ -262,12 +237,6 @@ def test_resample_grid_is_generated_not_joined_from_facts(spark, sf_dir):
     assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
     assert "Generate" in plan  # sequence+explode creates the calendar rows
     assert "Window" in plan
-
-
-def test_hll_merge_is_two_level_aggregate(spark, sf_dir):
-    plan = _physical(DEFS["x_agg_hll_merge"].fn(spark, sf_dir))
-    # daily sketches then union rollup: exactly the two grouping exchanges
-    assert plan.count("Exchange") == 2
 
 
 def test_snapshot_diff_is_single_conditional_aggregate(spark, sf_dir):

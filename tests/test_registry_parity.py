@@ -4,7 +4,12 @@ runs sf0.01)."""
 
 from __future__ import annotations
 
+import ast
+import inspect
+import re
+import sys
 from collections import defaultdict
+from pathlib import Path
 
 import pytest
 
@@ -54,8 +59,6 @@ _SHARED_ORACLE_GROUPS = {
         "a source and a sink that both pass nation through",
     frozenset({"x_src_csv_roundtrip", "x_src_orc_roundtrip"}):
         "two file formats",
-    frozenset({"x_join_bucketed", "x_join_skew_salted"}):
-        "two join strategies",
 }
 
 
@@ -72,6 +75,43 @@ def test_shared_oracles_are_allowlisted():
     assert not unexpected, f"ids sharing one oracle: {unexpected}"
     stale = [sorted(g) for g in _SHARED_ORACLE_GROUPS.keys() - shared]
     assert not stale, f"allowlisted groups that no longer share: {stale}"
+
+
+def _top_level_names(path: Path) -> set[str]:
+    tree = ast.parse(path.read_text())
+    return {
+        node.name
+        for node in tree.body
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef))
+    }
+
+
+def test_rows_only_gates_reference_what_exists():
+    """A rows-only id's ``gate=`` is the only thing vouching for its
+    answer, so every backticked reference in it must resolve: a registry
+    id must be registered, ``tests/<file>.py::<name>`` must name a file
+    that defines ``<name>``, a bare ``tests/<file>.py`` must exist, and a
+    ``_private`` name must be defined in the op's own module.  Retiring a
+    companion id or renaming a test then fails here instead of leaving
+    the gate pointing at nothing."""
+    root = Path(__file__).resolve().parent.parent
+    broken = []
+    for name, qd in sorted(DEFS.items()):
+        if qd.oracle is not None:
+            continue
+        module = sys.modules[inspect.unwrap(qd.fn).__module__]
+        for ref in re.findall(r"`([^`]+)`", qd.gate):
+            path, _, test = ref.partition("::")
+            if path.startswith("tests/") and path.endswith(".py"):
+                f = root / path
+                ok = f.is_file() and (not test or test in _top_level_names(f))
+            elif ref.startswith("_"):
+                ok = hasattr(module, ref)
+            else:
+                ok = ref in DEFS
+            if not ok:
+                broken.append((name, ref))
+    assert not broken, f"gate references that resolve to nothing: {broken}"
 
 
 def test_type_guard_catches_uncast_integer_sum(spark, duck, sf_dir):

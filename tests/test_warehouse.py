@@ -155,32 +155,6 @@ def test_approx_quantile_is_single_partial_aggregate(spark, sf_dir):
     assert "Sort" not in plan
 
 
-# --- x_agg_approx_distinct ----------------------------------------------------
-
-
-def test_approx_distinct_within_rsd_envelope_of_exact_twin(spark, sf_dir):
-    """``x_agg_approx_distinct`` is rows-only at the driver (HLL++ sketch
-    values are engine-specific); this is its local correctness gate — the
-    estimate must sit within the configured 5% rsd envelope (3 sigma) of
-    the hash-matched exact twin ``x_agg_count_distinct`` on every group,
-    and the two must agree on the group universe."""
-    exact = {
-        r["o_orderpriority"]: r["n_custs"]
-        for r in DEFS["x_agg_count_distinct"].fn(spark, sf_dir).collect()
-    }
-    approx = {
-        r["o_orderpriority"]: r["approx_custs"]
-        for r in DEFS["x_agg_approx_distinct"].fn(spark, sf_dir).collect()
-    }
-    assert approx.keys() == exact.keys()
-    for k, est in approx.items():
-        assert abs(est - exact[k]) <= max(3, 0.15 * exact[k]), (
-            k,
-            est,
-            exact[k],
-        )
-
-
 # --- x_etl_compact_small_files ----------------------------------------------
 
 
@@ -279,55 +253,3 @@ def test_global_row_number_plan_is_range_partitioned(spark, sf_dir):
     final = _physical(DEFS["x_etl_global_row_number"].fn(spark, sf_dir))
     # post-barrier: only the P-row offsets/total aggregates may funnel
     assert final.count("SinglePartition") <= 2
-
-
-def test_hll_merge_estimate_within_error_envelope(spark, sf_dir):
-    """Unioned per-day sketches must estimate per-type distinct users
-    within HLL's error envelope of the exact answer (lgK=12 → ~1.6% RSE;
-    gate at 5% ≈ 3 sigma), and sketch counts must cover every day."""
-    from pyspark.sql import functions as F
-
-    from dataengineer_scripts_spark import registry
-    from dataengineer_scripts_spark.tables import table
-
-    est = {
-        r.event_type: (r.est_users, r.n_daily_sketches)
-        for r in registry.definitions()["x_agg_hll_merge"]
-        .fn(spark, sf_dir)
-        .collect()
-    }
-    exact = {
-        r.event_type: r.n
-        for r in table(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    assert set(est) == set(exact)
-    for t, n in exact.items():
-        e, days = est[t]
-        assert abs(e - n) <= max(2, 0.05 * n), (t, e, n)
-        assert days >= 1
-
-
-def test_hll_exact_twin_shares_keys_and_bounds_the_sketch(spark, sf_dir):
-    """``x_agg_hll_merge_exact`` (oracle-checked) must be keyed identically
-    to the sketch rollup (same event_types, day-group counts equal) and
-    its exact distinct must bound the estimate within the 5% envelope —
-    the driver-visible attestation bridge for the rows-only sketch op."""
-    from dataengineer_scripts_spark import registry
-
-    defs = registry.definitions()
-    est = {
-        r.event_type: (r.est_users, r.n_daily_sketches)
-        for r in defs["x_agg_hll_merge"].fn(spark, sf_dir).collect()
-    }
-    exact = {
-        r.event_type: (r.n_users_exact, r.n_daily_groups)
-        for r in defs["x_agg_hll_merge_exact"].fn(spark, sf_dir).collect()
-    }
-    assert set(est) == set(exact)
-    for t, (n, days) in exact.items():
-        e, sketches = est[t]
-        assert sketches == days, t  # identical (day, event_type) grouping
-        assert abs(e - n) <= max(2, 0.05 * n), (t, e, n)
