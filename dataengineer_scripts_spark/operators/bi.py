@@ -3,7 +3,7 @@ events stream: distribution diagnostics (entropy, Gini), trend analysis
 (period-over-period), association mining (market basket), and cohort
 revenue.
 
-Design notes (100 TB posture):
+Design notes:
 - Each operator reduces to exact integer/decimal aggregates plus
   elementwise double math (the repo-wide float contract): entropies,
   Gini coefficients, growth rates and lifts are closed-form expressions
@@ -172,7 +172,7 @@ def x_win_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the TINY aggregate — the global window is safe
     precisely because it runs above month-grain data, never the fact.
     Measured (r12 stress): 1.2x wall at 10x orders, output constant at
-    the month grain — `scale_stress_r12_windows.json`."""
+    the month grain — `scale_stress_r12_windows.json @ 489b79a`."""
     m = (
         table(spark, sf_dir, "orders")
         .groupBy(F.date_trunc("month", "o_orderdate").cast("date").alias("month"))
@@ -325,8 +325,8 @@ def x_agg_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     brands (≤ 25 here, single digits in practice), linear in orders.
     Per-brand counts and the order total are broadcast back onto the
     pair aggregate.  Measured: 2.5 s at 1x facts vs 3.5 s at 10x
-    (exponent 0.14, `scale_stress_r13_graph.json`) with the brand-pair
-    output constant."""
+    (exponent 0.14, `scale_stress_r13_graph.json @ 489b79a`) with the
+    brand-pair output constant."""
     ob = _basket_ob(spark, sf_dir)
     n1 = ob.groupBy("p_brand").agg(F.count("*").alias("c1"))
     tot = ob.agg(F.count_distinct("l_orderkey").alias("n"))
@@ -1107,16 +1107,15 @@ def x_graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-block driver round trip is node-grain by construction (brand
     cardinality) — the same boundedness argument as the broadcast-rank
     step (see ``_pagerank_step``); for web-scale node sets both would
-    move to frame-resident form together.  At 100 TB the
-    transition frame shuffles once at build and iterations move
-    node-grain rows only — measured: 9.4 s at 1x facts vs 6.3 s at 10x
-    (`scale_stress_r13_graph.json`; iteration count is set by graph
-    topology, not corpus size, so wall is flat-to-down once the
-    checkpointed build amortizes); for graphs whose node frame outgrows
-    the broadcast ceiling (web-scale, not dimension-scale), drop the
-    ``broadcast(r)`` hint and the same loop becomes a src-co-partitioned
-    shuffle join — the plan Spark picks automatically once the hint is
-    absent."""
+    move to frame-resident form together.  The transition frame
+    shuffles once at build and iterations move node-grain rows only, so
+    the iteration count is set by graph topology, not table size
+    (measured: 9.4 s at 1x facts vs 6.3 s at 10x,
+    `scale_stress_r13_graph.json @ 489b79a`); for graphs whose node
+    frame outgrows the broadcast ceiling (web-scale, not
+    dimension-scale), drop the ``broadcast(r)`` hint and the same loop
+    becomes a src-co-partitioned shuffle join — the plan Spark picks
+    automatically once the hint is absent."""
     edges, deg, nodes, trans = _pagerank_graph(spark, sf_dir)
     # node-grain scalar off the checkpointed frame; an EMPTY graph
     # (adversarial empty-facts corpus) has no rows — any positive
@@ -1267,8 +1266,9 @@ def x_sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``brand_edges`` CTE), so one basket self-join per session serves
     this walk, both PageRank variants and the market-basket rules.
     Scale-measured: 2.7 s at 1x facts vs 4.2 s at 10x (exponent 0.17,
-    `scale_stress_r13_graph.json`) — only the edge materialization
-    sees the corpus; the recursion walks the bounded brand digraph."""
+    `scale_stress_r13_graph.json @ 489b79a`) — only the edge
+    materialization sees the corpus; the recursion walks the bounded
+    brand digraph."""
     _brand_e0(spark, sf_dir).createOrReplaceTempView("brand_edges")
     return spark.sql(RECURSIVE_WALK_SQL)
 
@@ -1409,8 +1409,8 @@ def x_etl_outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Two passes by necessity: exact quartiles need the value
     distribution before fences can be tested (the group-grain fence
-    frame then broadcasts onto the counting scan — at 100 TB the second
-    pass is scan+broadcast, no extra shuffle; an approx-quantile
+    frame then broadcasts onto the counting scan, so the second pass is
+    a scan plus a broadcast join with no extra shuffle; an approx-quantile
     single-pass variant trades this for the GK sketch, the
     ``x_agg_approx_quantile`` path).  Fences compare UNROUNDED in both
     engines so a boundary row cannot flip on a rounding edge.

@@ -785,9 +785,9 @@ def x_etl_sample_consistent(spark: SparkSession, sf_dir: str) -> DataFrame:
     Because each side filters independently, the filters are scan-side
     (pushed ahead of the join, no post-join row explosion to discard)
     and the sampled join is provably identical to join-then-filter —
-    asserted in tests.  At 100 TB this means a 5× cheaper dev-scale
-    mirror of the whole warehouse from a one-line predicate, with zero
-    coordination between table pipelines."""
+    asserted in tests.  So a one-line predicate gives a 5× smaller
+    mirror of the whole warehouse, with no coordination between table
+    pipelines."""
     keep_c = _keep_bucket(F.col("c_custkey")) < _CONSISTENT_RATE_PER_MILLE
     keep_o = _keep_bucket(F.col("o_custkey")) < _CONSISTENT_RATE_PER_MILLE
     cust = (
@@ -876,9 +876,9 @@ def src_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     without rewriting history: merge-on-read, old files untouched.
 
     Scale note: ``mergeSchema`` runs a footer-reading job over EVERY
-    file before the query (distributed, but an extra full pass over
-    file metadata), so at 100 TB you set the union schema EXPLICITLY on
-    the reader (``spark.read.schema(evolved)``) — same per-row
+    file before the query (an extra job over file metadata, paid on
+    every run of a batch job), so a production reader sets the union
+    schema EXPLICITLY (``spark.read.schema(evolved)``) — same per-row
     semantics, no footer sweep; the option here exercises the inference
     path.  Only
     ADDITIVE evolution is safe; renames/type-changes need a real table
@@ -941,8 +941,8 @@ def x_etl_global_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global row numbering at scale (stable example ids for a training
     corpus, offsets for shard manifests) WITHOUT the single-partition
     window: ``row_number() OVER (ORDER BY ...)`` with no PARTITION BY
-    funnels 100 TB through one task — the classic scale killer.  The
-    scale-correct plan, built from Spark primitives:
+    funnels the whole table through one task, leaving every other core
+    idle.  The parallel plan, built from Spark primitives:
 
     1. ``repartitionByRange`` + ``sortWithinPartitions`` on the total
        order key — a sampled range shuffle, every partition sorted and
@@ -1121,8 +1121,8 @@ def x_etl_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sequence()`` + ``explode`` off the spans aggregate (rows created
     map-side, never shuffled as input); the fill is one window over the
     grid — all keyed on user_id, so AQE chains the exchanges.  Grid size
-    is users × span-days regardless of event count: at 100 TB of events
-    the resampled output is the SMALL side."""
+    is users × span-days regardless of event count, so the resampled
+    output stays the SMALL side as events grow."""
     from pyspark.sql import Window
 
     ev = table(spark, sf_dir, "events")
@@ -1182,7 +1182,7 @@ def x_etl_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``x_llm_sample_stratified``, so the decision is a pure row-key
     function — reproducible across runs, engines, and retries) and
     report per-shard doc/char/token balance, the numbers a writer checks
-    BEFORE burning a 100 TB write on a skewed layout.  One narrow
+    BEFORE committing a write to a skewed layout.  One narrow
     codegen'd projection + one hash aggregate collapsing to SHARD_N rows
     map-side; the real write would be
     ``df.repartition(SHARD_N, key).write`` with this exact key."""
@@ -1242,9 +1242,8 @@ def x_etl_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sum(when(shipdate < T))`` per cutoff in a single hash aggregate,
     strictly one shuffle where the join formulation needs three.  Rows
     with no line before either cutoff never leave the map side; an
-    unchanged key is dropped by a post-aggregate filter.  At 100 TB this
-    is the difference between re-reading the fact table twice + a
-    key-sized join, and one pass."""
+    unchanged key is dropped by a post-aggregate filter: one pass over
+    the fact table instead of two reads plus a key-sized join."""
     t_old = F.lit(SNAPDIFF_OLD).cast("timestamp")
     t_new = F.lit(SNAPDIFF_NEW).cast("timestamp")
     one_old = F.when(F.col("l_shipdate") < t_old, 1).otherwise(0)
@@ -1297,9 +1296,9 @@ def x_etl_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: two partition-pruned scans (state would be a stored table in
     production; here time-travel predicates stand in), each ONE hash
     aggregate collapsing to group-count rows map-side, then a group-sized
-    union+re-aggregate that AQE executes locally.  At 100 TB only the
-    delta partition is ever read again — the historical scan happened
-    once, at state-build time."""
+    union+re-aggregate that AQE executes locally.  With stored state,
+    only the delta partition would be read again — the historical scan
+    happens once, at state-build time."""
     t_old = F.lit(SNAPDIFF_OLD).cast("timestamp")
     t_new = F.lit(SNAPDIFF_NEW).cast("timestamp")
     li = table(spark, sf_dir, "lineitem").select(
@@ -1365,7 +1364,7 @@ def x_etl_dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts — the generalization of the reference's job-health report
     (`Job Cek Script/app.py:60-120` whitelists statuses and flags
     everything else) to declarative table-level contracts, and the gate
-    a 100 TB ingest runs before publishing a partition.
+    an ingest job runs before publishing a partition.
 
     Plan: every rule is ONE conditional aggregate over its table's scan —
     checked and violated counted in the same pass, collapsing map-side to
@@ -1446,8 +1445,8 @@ def x_etl_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: ``stack`` is a Generate (flatMap) directly above the scan —
     entirely narrow, no shuffle; the scan reads only the unpivoted
-    columns.  At 100 TB this runs at scan speed and doubles row count,
-    which is the honest cost of the long format."""
+    columns.  It runs at scan speed and doubles row count, which is
+    the honest cost of the long format."""
     return table(spark, sf_dir, "part").select(
         "p_partkey",
         F.expr(
@@ -1564,8 +1563,8 @@ def x_etl_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     compute (row_count, sum of per-row content hashes) per segment and
     compare; a single corrupted/missing/duplicated row flips the
     checksum while the aggregate stays one scan-side pass (no sort, no
-    row shipping — this is how you diff a 100 TB table across clusters
-    with kilobytes of traffic).
+    row shipping — two copies of a table are compared by exchanging
+    kilobytes of checksums, not rows).
 
     The row hash is the md5-prefix 60-bit integer of a canonical '|'
     serialization (floats pre-rounded so both engines serialize the same
@@ -1623,12 +1622,11 @@ def x_etl_cdc_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     is not hash-aggregable in Spark and falls back to SortAggregate,
     sorting every scan partition; the scalar maxes are map-side
     combinable running maxes.  A row_number window (the oracle's
-    spelling) would sort every key group — at a 100 TB log the
-    aggregate form shuffles key-cardinality candidates instead of
-    sorting the log, and all three shuffles hash the same key prefix so
-    AQE reuses the exchange.  Measured (r12 stress, events ×30 as fresh
+    spelling) would sort every key group; the aggregate form shuffles
+    key-cardinality candidates instead of sorting the log, and all
+    three shuffles hash the same key prefix so AQE reuses the exchange.  Measured (r12 stress, events ×30 as fresh
     user populations): 4.3x wall at 30x log, compacted keys exactly 30x
-    (7.5k -> 225k) — `scale_stress_r12_x30.json`."""
+    (7.5k -> 225k) — `scale_stress_r12_x30.json @ 489b79a`."""
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id", "value"
     )

@@ -13,9 +13,9 @@ Declarative restatement of the reference's daily health report
   + `agg_exists_to_status` (app.py:265-270, any error ⇒ Failed).
 
 Plan shape: one hash aggregate on `user_id` (single shuffle), then scalar
-`when`-cascades — everything whole-stage-codegen'd, nothing collected.
-At 100 TB this is a partial+final aggregate over the natural key; no
-window, no join, no Python.
+`when`-cascades — everything whole-stage-codegen'd, nothing collected:
+a partial+final aggregate over the natural key, with no window, no join
+and no Python worker.
 """
 
 from __future__ import annotations

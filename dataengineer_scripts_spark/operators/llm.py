@@ -211,7 +211,7 @@ def _exact_text_groups(df: DataFrame, aggs: dict[str, Column]) -> DataFrame:
       ``(hash, text)``, so a 64-bit collision can never merge two
       distinct texts.  Text bytes shuffled are proportional to the
       DUPLICATE rows, not the corpus (measured flat per doc at 1x/3x/10x
-      — scale_stress_r13_exact.json).
+      — scale_stress_r13_exact.json @ 489b79a).
 
     The ``aggs`` mapping (output name → aggregate column) is applied in
     both phases, but phase-1 aggregate values are only EMITTED for
@@ -579,8 +579,8 @@ def x_llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only driver check (xxhash64 has no DuckDB twin); the local pytest
     asserts it finds the corpus' exact duplicates.  Scale-measured: 2.8 s
     at 1x documents vs 4.3 s at 10x (exponent 0.18,
-    `scale_stress_r13_graph.json`) — candidate volume stays linear under
-    the 16-bit chunk banding."""
+    `scale_stress_r13_graph.json @ 489b79a`) — candidate volume stays
+    linear under the 16-bit chunk banding."""
     th = (
         rebalanced(table(spark, sf_dir, "documents"))
         .select("doc_id", F.explode(F.split("text", " ")).alias("w"))
@@ -4626,7 +4626,7 @@ def x_llm_ngram_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction here); the total mass is a 1-row aggregate joined back
     broadcast.  Measured (r12 stress): 0.9x wall at 10x documents,
     output constant at the curve grain —
-    `scale_stress_r12_windows.json`."""
+    `scale_stress_r12_windows.json @ 489b79a`."""
     toks = (
         table(spark, sf_dir, "documents")
         .select(F.explode(F.split("text", " ")).alias("tok"))

@@ -5,7 +5,7 @@ No fixture table carries real media bytes, so the binary modality is
 SYNTHESIZED deterministically (UTF-8 bytes of ``documents.text`` — ASCII in
 the fixture, so byte values equal codepoints and every byte-level stat has
 an exact DuckDB twin).  What is REAL and tested at the Spark layer is the
-100 TB-relevant plumbing:
+plumbing real media would use:
 
 - an opaque ``BinaryType`` column flowing through the plan (scan → project
   → Arrow batch → Python → result schema);
@@ -409,12 +409,11 @@ def x_mm_dedup_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     UTF-8 synthesis as ``x_mm_record``'s media column, so the DuckDB
     oracle replays the digest bit-for-bit.
 
-    This IS the 'hash first, compare within bucket' two-phase shape the
-    text dedup docstring prescribes for 100 TB: the shuffle key is a
-    16-byte digest, never the payload — a petabyte of media moves
-    nothing but digests through the exchange, and a (vanishingly rare)
-    digest collision is resolved by a within-bucket byte compare that
-    touches only colliding groups."""
+    This IS the 'hash first, compare within bucket' two-phase shape of
+    the text dedup: the shuffle key is a 16-byte digest, never the
+    payload — the exchange moves digests, not media bytes, and a
+    (vanishingly rare) digest collision is resolved by a within-bucket
+    byte compare that touches only colliding groups."""
     data = F.encode(F.col("text"), "UTF-8")
     return (
         table(spark, sf_dir, "documents")

@@ -1250,7 +1250,7 @@ def x_win_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Measured (r12 stress, 30x events replicas with fresh user
     populations): 1.9x wall at 30x data, session rows exactly 30x
-    (95k -> 2.86M) — `scale_stress_r12_x30.json`."""
+    (95k -> 2.86M) — `scale_stress_r12_x30.json @ 489b79a`."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
     is_new = F.when(

@@ -9,7 +9,7 @@ audits and eval-set mining), and the per-language character-trigram
 profile is the classic language-ID model build (the trained twin of
 ``x_llm_lang_id``'s heuristic scorer).
 
-Design notes (100 TB posture):
+Design notes:
 - Everything reduces to token/char explodes feeding hash aggregates on
   (doc, term)-grained keys — map-side partials absorb the within-doc
   repetition before any shuffle, and every join key is a term/doc id,
@@ -155,7 +155,7 @@ def x_llm_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-order independent.
 
     Plan: the term filter applies AT THE EXPLODE (only query-term rows
-    survive into the aggregate — at 100 TB the (doc, term) frame is
+    survive into the aggregate, so the (doc, term) frame is
     |query|-bounded per doc, not vocabulary-sized); df and the N/avgdl
     scalars are broadcast; doc length joins on doc_id, the same key the
     final per-doc sum groups on."""
@@ -271,8 +271,8 @@ def x_llm_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back as offsets — global rank = offset + local rank,
     bit-identical to a single global window (rank recovery is
     boundary-placement-independent) but the sort runs as
-    ZIPF_RANK_PARTS parallel tasks instead of funneling a 10⁷–10⁸-row
-    vocabulary through one partition at 100 TB.  The localCheckpoint is
+    ZIPF_RANK_PARTS parallel tasks instead of funneling the whole
+    vocabulary through one partition.  The localCheckpoint is
     the usual consistency barrier: counts/offsets/join must read ONE
     pid assignment since range-boundary sampling differs per execution.
     The moments then collapse to one row.

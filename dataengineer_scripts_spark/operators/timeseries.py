@@ -3,7 +3,7 @@ and the order history: rolling anomaly detection, time-weighted
 averaging, marketing attribution, and grouped regression/correlation
 from sufficient statistics.
 
-Design notes (100 TB posture):
+Design notes:
 - Every operator is ONE pass over events/orders: window functions ride a
   single (user/segment)-keyed shuffle; nothing is collected, nothing is
   iterated driver-side.
@@ -481,7 +481,7 @@ def x_ts_ma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     a lag sharing ONE global sort over day-grain data (hundreds of
     rows at any corpus scale — the aggregate did the data-sized work).
     Measured (r12 stress): 1.2x wall at 10x orders, output constant at
-    the order-day grain — `scale_stress_r12_windows.json`."""
+    the order-day grain — `scale_stress_r12_windows.json @ 489b79a`."""
     daily = (
         table(spark, sf_dir, "orders")
         .groupBy(F.date_trunc("day", "o_orderdate").cast("date").alias("day"))
@@ -1025,7 +1025,7 @@ def x_ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition identity matters — the seven weekday classes line up
     regardless of labeling.  Measured (r12 stress): 0.7x wall at 10x
     events, output constant at the day grain —
-    `scale_stress_r12_windows.json`."""
+    `scale_stress_r12_windows.json @ 489b79a`."""
     d = (
         table(spark, sf_dir, "events")
         .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day"))
@@ -1200,7 +1200,7 @@ def x_ts_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded frames — the grain-bounded-window pattern, never a window
     over raw events.  Measured (r12 stress): 0.9x wall at 10x events,
     output constant at the lifetime grain —
-    `scale_stress_r12_windows.json`."""
+    `scale_stress_r12_windows.json @ 489b79a`."""
     ud = (
         table(spark, sf_dir, "events")
         .select("user_id", F.date_trunc("hour", "ts").alias("d"))
@@ -1216,9 +1216,9 @@ def x_ts_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("d").alias("last_d"),
     )
     # observation end as a 1-ROW aggregate broadcast-joined in — NOT an
-    # unpartitioned window over `life`: users are data-sized at scale
-    # (hundreds of millions at 100 TB), so a global window there would
-    # funnel the whole user frame through one task.  The 1-row max costs
+    # unpartitioned window over `life`: users grow with the data, so a
+    # global window there would funnel the whole user frame through one
+    # task.  The 1-row max costs
     # a second column-pruned scan-only pass over events, which is
     # scan-linear and shuffle-free — the right trade.
     end = (

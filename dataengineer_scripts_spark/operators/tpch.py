@@ -25,7 +25,7 @@ measures (see the derived-partsupp comment mid-module), computed
 identically in the Spark plan and the DuckDB oracle so the driver's
 value hash attests the derivation itself.
 
-Design notes (100 TB posture):
+Design notes:
 - region/nation/part/customer are dimension-sided and broadcast; orders
   and lineitem are the fact sides and meet in AQE-managed shuffle joins
   on their natural keys (skew-split enabled in session.py).
@@ -179,8 +179,8 @@ def x_tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: ALL three predicates reach the parquet scan as PushedFilters
     and the scan reads exactly four columns (ReadSchema); the aggregate
     is a map-side partial + one single-row final.  This is the query
-    shape where a columnar scan does all the work — at 100 TB it is
-    bounded by I/O after row-group min/max skipping, nothing else."""
+    shape where a columnar scan does all the work: it is bounded by
+    I/O after row-group min/max skipping, nothing else."""
     li = table(spark, sf_dir, "lineitem")
     return (
         li.filter(
@@ -981,7 +981,7 @@ def x_tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the fixture's pairs do NOT follow) keeps Q9's spec shape: every
 # lineitem row finds exactly one partsupp row.
 #
-# 100 TB posture: the derivation is one DISTINCT over two int64 columns,
+# Cost: the derivation is one DISTINCT over two int64 columns,
 # built ONCE per session and shared by all five consumers (session_cache) —
 # partial map-side dedup, 16-byte exchange rows, no payload; downstream
 # joins are pair- or part-grain.  At fixture scale the pair set is ~0.86x

@@ -4,11 +4,36 @@ One JVM per process, ``local[N]`` threads sized to the host, shuffle
 partitions sized to cores (not the 200 default).  AQE is on, so at the
 fixtures' sizes small shuffles coalesce and small join sides broadcast at
 runtime.
+
+Class-data sharing.  The client is a cron-style batch job, so every run
+pays the driver JVM's class loading and verification.  ``builder()`` gives
+the driver JVM a dynamic AppCDS archive: the first run on a host records
+it when its JVM exits, and every later run maps it, which roughly halves
+the JVM start and shortens the first SQL jobs.  The archive lives in
+``${XDG_CACHE_HOME:-~/.cache}/spark-graft/cds/``, beside the empty
+directory that becomes ``SPARK_CONF_DIR`` (JDK 17 records no archive while
+a non-empty directory is on the class path, and ``$SPARK_HOME/conf`` is
+one).  The directory is per user, not per checkout, because the class path
+is the same for every checkout; delete it to drop the archive, and the
+next run records a new one.  The archive is used only when
+``SPARK_CONF_DIR`` is unset and ``$SPARK_HOME/conf`` holds nothing but
+``*.template`` files, so a real ``spark-defaults.conf`` keeps working,
+without an archive.  An archive that no longer matches costs speed, never
+an answer: the JVM checks it at start and falls back to normal class
+loading.  A truncated archive is the exception (the JVM dies on it), so an
+archive is only ever published whole; delete the directory if a copy or a
+disk fault damaged it.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import re
+import shutil
+import subprocess
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
@@ -64,7 +89,172 @@ ENGINE_CONFS: dict[str, str] = {
 }
 
 
+#: Class-path entries the Spark launcher takes from the environment besides
+#: the conf dir and ``$SPARK_HOME/jars``.  Any of them may be a non-empty
+#: directory, with which the JVM fails the recording at exit (status 1), so
+#: every run would pay for a recording that is never published.
+_CLASS_PATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+
+#: The flags carry the cache path unquoted: whitespace would split
+#: ``extraJavaOptions`` and ``:`` separates ``-Xlog`` fields.
+_PLAIN_PATH = re.compile(r"[\w./-]+")
+
+_RECORD = "-XX:ArchiveClassesAtExit="
+
+#: How long a recording process waits at exit for its JVM to write the
+#: archive (about 12 s for a 160-220 MB archive on 4 cores).
+ARCHIVE_WAIT_S = 60
+
+
+def cds_dir() -> str:
+    """Where the archive and its empty conf dir live: a per-user cache."""
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    return os.path.join(os.path.abspath(cache), "spark-graft", "cds")
+
+
+def archive_key(spark_home: str, env: Mapping[str, str], conf_dir: str) -> str:
+    """Hash of what the archive was recorded against: the JDK the launcher
+    runs (``$JAVA_HOME``, else ``java`` on the PATH; its home and its
+    ``release`` file, which names the version) and the driver's class path
+    (the conf dir, then the name, size and mtime of every jar in
+    ``$SPARK_HOME/jars``, whose names carry the Spark version).  Raises
+    ``OSError`` when ``$SPARK_HOME/jars`` cannot be listed."""
+    java_home = env.get("JAVA_HOME")
+    if not java_home and (java := shutil.which("java", path=env.get("PATH"))):
+        java_home = os.path.dirname(os.path.dirname(os.path.realpath(java)))
+    h = hashlib.sha256(f"{java_home}\0{conf_dir}\0".encode())
+    if java_home:
+        try:
+            with open(os.path.join(java_home, "release"), "rb") as fh:
+                h.update(fh.read())
+        except OSError:
+            pass
+    for e in sorted(os.scandir(os.path.join(spark_home, "jars")), key=lambda e: e.name):
+        st = e.stat()
+        h.update(f"{e.name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    return h.hexdigest()[:20]
+
+
+def _writable(path: str) -> bool:
+    """Whether ``path`` is, or can be created as, a writable directory."""
+    while not os.path.lexists(path):
+        path = os.path.dirname(path)
+    return os.path.isdir(path) and os.access(path, os.W_OK | os.X_OK)
+
+
+def class_data_plan(
+    spark_home: str, env: Mapping[str, str], cache: str
+) -> tuple[dict[str, str], list[str]]:
+    """The environment update and driver JVM flags that give the driver JVM
+    the class-data-sharing archive kept in ``cache`` (see the module
+    docstring): map the archive when it exists, record it when it does not
+    and ``cache`` is writable; ``({}, [])`` when no archive can be used.
+
+    The JVM logs one ``[cds]`` line per class it leaves out of a
+    recording (over a thousand in a benchmark run); that goes to a file
+    beside the recording, not to the batch job's stdout.  A mapped
+    archive's warnings go to stderr."""
+    empty = os.path.join(cache, "conf")
+    if env.get("SPARK_CONF_DIR", empty) != empty or any(env.get(k) for k in _CLASS_PATH_ENV):
+        return {}, []
+    if not _PLAIN_PATH.fullmatch(cache):
+        return {}, []
+    try:
+        conf = os.listdir(os.path.join(spark_home, "conf"))
+    except FileNotFoundError:
+        conf = []
+    if any(not n.endswith(".template") for n in conf):
+        return {}, []
+    try:
+        archive = os.path.join(cache, archive_key(spark_home, env, empty) + ".jsa")
+    except OSError:
+        return {}, []
+    redirect = {"SPARK_CONF_DIR": empty}
+    if os.path.isfile(archive):
+        return redirect, [f"-XX:SharedArchiveFile={archive}", "-Xlog:cds*=off", "-Xlog:cds*=warning:stderr"]
+    if not _writable(cache):
+        return {}, []
+    part = f"{archive}.{os.getpid()}.part"
+    return redirect, [f"{_RECORD}{part}", "-Xlog:cds*=off", f"-Xlog:cds*=warning:file={part}.log"]
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def publish_archive(part: str, archive: str, proc: subprocess.Popen | None) -> bool:
+    """Publish the recording ``part`` as ``archive`` once its JVM ``proc``
+    has exited cleanly, then prune the cache directory.
+
+    The JVM writes the recording only as it exits, and a JVM that maps a
+    truncated archive dies with SIGBUS, so the archive appears under its
+    name only whole: closing the JVM's stdin makes it exit, the wait is
+    bounded by ``ARCHIVE_WAIT_S``, and a clean exit is followed by an fsync
+    and an atomic rename.  Anything else leaves no archive, so the next run
+    records again.  Pruning removes archives with other keys (after a
+    publish) and recordings whose process is gone.  Returns whether
+    ``archive`` was published."""
+    published = False
+    if proc is not None:
+        if proc.stdin is not None:
+            proc.stdin.close()
+        try:
+            status = proc.wait(timeout=ARCHIVE_WAIT_S)
+        except subprocess.TimeoutExpired:
+            status = None
+        # wait() also reports 0 for a process it cannot reap (the copy of
+        # ``proc`` in a forked child), so check that the JVM is gone
+        published = status == 0 and not _alive(proc.pid) and os.path.isfile(part)
+    if published:
+        with open(part, "rb") as fh:
+            os.fsync(fh.fileno())
+        os.replace(part, archive)
+        if os.path.isfile(part + ".log"):
+            os.replace(part + ".log", archive + ".log")
+    cache = os.path.dirname(archive)
+    keep = {os.path.basename(archive), os.path.basename(archive) + ".log", "conf"}
+    try:
+        names = os.listdir(cache)
+    except FileNotFoundError:  # the directory was deleted to drop the archive
+        return published
+    for name in names:
+        m = re.search(r"\.(\d+)\.part(\.log)?$", name)
+        if name in keep or (m and int(m[1]) != os.getpid() and _alive(int(m[1]))):
+            continue
+        if m or published:
+            try:
+                os.remove(os.path.join(cache, name))
+            except OSError:
+                pass
+    return published
+
+
+def _publish_at_exit(part: str, archive: str) -> None:
+    from pyspark import SparkContext
+
+    publish_archive(part, archive, getattr(SparkContext._gateway, "proc", None))
+
+
 def builder(app_name: str = "dataengineer_scripts_spark") -> SparkSession.Builder:
+    # pyspark's own lookup, so the plan keys the Spark the launcher runs
+    from pyspark.find_spark_home import _find_spark_home
+
+    env, cds_flags = class_data_plan(_find_spark_home(), os.environ, cds_dir())
+    try:
+        if env:
+            os.makedirs(env["SPARK_CONF_DIR"], exist_ok=True)
+    except OSError:
+        env, cds_flags = {}, []
+    os.environ.update(env)
+    if part := next((f[len(_RECORD):] for f in cds_flags if f.startswith(_RECORD)), None):
+        atexit.unregister(_publish_at_exit)
+        atexit.register(_publish_at_exit, part, part.rsplit(".", 2)[0])
     b = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName(app_name)
@@ -75,7 +265,7 @@ def builder(app_name: str = "dataengineer_scripts_spark") -> SparkSession.Builde
         # interpreted at 3-5x cost.  Size it for a long-lived session.
         .config(
             "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing",
+            " ".join(["-XX:ReservedCodeCacheSize=512m", "-XX:+UseCodeCacheFlushing", *cds_flags]),
         )
         .config("spark.ui.enabled", "false")
         # No \r-chunked [Stage N:===>] progress bars on stderr: a batch

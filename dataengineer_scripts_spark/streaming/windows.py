@@ -443,7 +443,7 @@ def x_stream_upsert_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     lakehouse MERGE performs, minus the transaction log this sandbox
     doesn't ship.  Measured (r12 stress): 2.0x wall at 30x events
     through the full stage-split-run-compact cycle, upserted keys
-    exactly 30x (1.5k -> 45k) — `scale_stress_r12_x30.json`."""
+    exactly 30x (1.5k -> 45k) — `scale_stress_r12_x30.json @ 489b79a`."""
     import tempfile
 
     from .runtime import stream_events_split

@@ -95,10 +95,9 @@ def rebalanced(df: DataFrame) -> DataFrame:
     Scale posture: this is NOT a local-test hack — "repartition a few fat
     splits before an expensive per-row stage" is the standard fix for
     split-starved pipelines on real clusters too (one gzip file, one
-    kafka partition, a dimension-sized corpus).  When the scan is already
-    at least cluster-wide (the 100 TB case: thousands of splits), this
-    returns the input UNCHANGED — no shuffle is added on the path where
-    the data is big."""
+    kafka partition, a dimension-sized corpus).  When the scan already
+    has at least one split per core, this returns the input UNCHANGED —
+    no shuffle is added on the path where the data is big."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:

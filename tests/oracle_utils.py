@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import datetime as dt
 import decimal
+import functools
 import math
 from typing import Any
 
@@ -185,6 +186,7 @@ def assert_matches_oracle(df, con, sql: str, name: str = "") -> None:
         assert a == b, f"{name}: first differing row #{i}:\n spark={a}\n duck ={b}"
 
 
+@functools.cache
 def transitive_tables(fn):
     """Fixture tables ``fn`` reads, following ``helper(spark, sf_dir``
     calls through the op's own module (and registered ops it composes,
@@ -201,7 +203,12 @@ def transitive_tables(fn):
     arguments (``table(spark=spark, sf_dir=sf_dir, name="x")``, the r18
     ADVICE escape), arbitrary wrapping/whitespace, attribute calls
     (``mod.helper(spark, sf_dir)``) — so undercounting now requires a
-    genuinely dynamic call, which correctly resolves to ``None``."""
+    genuinely dynamic call, which correctly resolves to ``None``.
+
+    Memoized per function, and the set is frozen: the source is read
+    from disk, so without the memo a package file edited while the
+    suite runs would make a call-time result disagree with the
+    import-time one an enrollment was computed from."""
     import ast
     import inspect
     import sys
@@ -274,4 +281,4 @@ def transitive_tables(fn):
                 ok = False
 
     walk(fn)
-    return tabs if ok else None
+    return frozenset(tabs) if ok else None
