@@ -16,7 +16,7 @@ Layout:
     functions/    — scalar function layer (SURVEY.md §2.7)
     operators/    — relational core, health flagship, LLM ops (§2.2-2.6, 2.9)
     streaming/    — structured-streaming operators (§2.9 x_stream_*)
-    sources/      — REST DataSource, JDBC/JSON source config (§2.1)
+    sources/      — REST reads, JDBC/JSON source config (§2.1)
     sinks.py      — Excel / JSON / HTTP-foreach sinks (§2.1, §2.8)
 """
 

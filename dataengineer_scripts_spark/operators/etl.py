@@ -20,8 +20,9 @@ expressible in the DuckDB oracle:
 Scale posture: the stub stands for an external API; the Spark side is the
 part that must scale.  Fan-out parallelism is partition count (Spark tasks
 are the thread pool), per-request retry stays inside the partition function
-under ``spark.task.maxFailures``, and the REST source reads pages from
-executors — never a driver loop over rows.
+under ``spark.task.maxFailures``.  REST listings are read on the driver,
+one page at a time (``sources.rest.rest_read``): the node listing is the
+25-row ``nation`` dim, at most 4 pages of 8.
 """
 
 from __future__ import annotations
@@ -58,7 +59,6 @@ from ..sources.rest import (
     NODE_FIELDS,
     NODE_SCHEMA,
     login,
-    register_rest_source,
     rest_read,
 )
 from ..sources.stub_api import (
@@ -108,8 +108,9 @@ def _node_seed_rows(spark: SparkSession, sf_dir: str) -> list[dict]:
     return [{k: r[k] for k in NODE_FIELDS} for r in rows]
 
 
-# One stub per (flavor, sf_dir), kept alive for the process lifetime: the
-# DataFrames returned by source operators read it lazily at collect time.
+# One stub per (flavor, sf_dir), kept alive for the process lifetime: every
+# query on the same fixtures reuses it, and x_stream_rest_poll's stream
+# polls it after the operator returns.
 _SERVERS: dict[tuple[str, str], StubApi] = {}
 
 
@@ -131,10 +132,10 @@ def _reset(api: StubApi) -> None:
 
 
 def _receipts_df(spark: SparkSession, api: StubApi, token: str) -> DataFrame:
-    """Delivery receipts as a PARTITIONED read through the paginated REST
-    source (``/receipts/list``) — one executor-fetched partition per page,
-    never one driver-side GET, so the verify-side read scales with the
-    fan-out it audits."""
+    """Delivery receipts read back through the paginated REST listing
+    (``/receipts/list``, ≤ 20 rows, at most 3 pages of 8) after the
+    fan-out has run: the walk happens now, so the frame holds the
+    receipts as of this call."""
     return rest_read(
         spark,
         api.base_url,
@@ -173,18 +174,12 @@ def src_rest_auth(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"WITH {_SQL_NODES} SELECT * FROM nodes WHERE type <> 'next'",
 )
 def src_rest_get(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paginated REST read through the Python DataSource: one partition per
-    API page (reference ``page_size=8``, ``app.py:126``), fetched by
-    executors in parallel; the ``type <> 'next'`` predicate
-    (``sync.py:52``) is offered to the source via ``pushFilters`` and
-    becomes the API's ``type_ne`` query param when the session has Python
-    filter pushdown enabled — and is evaluated post-scan by Spark when not.
-    Either way the result is identical; pushdown only changes bytes moved."""
+    """Paginated REST read (reference ``page_size=8``, ``app.py:126``):
+    the driver walks the listing's pages — page 0 reports the total, then
+    one GET per remaining page — and the ``type <> 'next'`` predicate
+    (``sync.py:52``) is a Spark filter on the resulting frame."""
     api = _server(spark, sf_dir)
     token = login(api.base_url)
-    # python.filterPushdown is pinned on via ENGINE_CONFS (registry applies
-    # it to driver-owned sessions too); without it Spark rejects any reader
-    # that implements pushFilters.
     return rest_read(spark, api.base_url, token, page_size=8).filter(
         F.col("type") != "next"
     )
@@ -198,11 +193,10 @@ def src_rest_get(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def src_rest_limit_push(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded REST fetch with the limit pushed to the source
-    (``app.py:126`` fetches exactly one ``page_size=8`` page): the
-    ``limit`` reader option caps the planned partitions at
-    ``ceil(limit/page_size)`` and the planning probe's page-0 payload is
-    reused, so exactly ONE projects request is issued.  The stub is seeded
+    """Bounded REST fetch (``app.py:126`` fetches exactly one
+    ``page_size=8`` page): the page walk stops at ``ceil(limit/page_size)``
+    pages, and page 0 is the one that reports the total, so exactly ONE
+    projects request is issued.  The stub is seeded
     in id order, so page 0 is deterministically the 8 lowest ids and the
     result carries a full oracle (``ORDER BY id LIMIT 8``)."""
     api = _server(spark, sf_dir)
@@ -526,22 +520,18 @@ def exec_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def flagship_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's complete sync pipeline (SURVEY.md §3.1,
-    ``sync.py:73-81``) as ONE Spark dataflow: login → REST-source read of
-    the project DAG (partitioned pages, pushed type filter) → sync-URL
-    construction (``join_url_construct``) → partitioned HTTP POST fan-out
-    with the receipts read back and joined to the plan's URL column.  The
+    ``sync.py:73-81``) as ONE Spark dataflow: login → REST read of the
+    project DAG (one driver page walk, 4 GETs for 25 nodes) → type filter
+    and sync-URL construction (``join_url_construct``) as Spark
+    expressions → partitioned HTTP POST fan-out with the receipts read
+    back and joined to the plan's URL column.  The
     oracle asserts the full composition: exactly the non-'next' nodes were
     synced once each, with the URLs the reference would build."""
     api = _server(spark, sf_dir)
     token = login(api.base_url)
     _reset(api)
-    register_rest_source(spark)
     nodes = (
-        spark.read.format("rest")
-        .option("base_url", api.base_url)
-        .option("token", token)
-        .option("page_size", 8)
-        .load()
+        rest_read(spark, api.base_url, token, page_size=8)
         .filter(F.col("type") != "next")
         .select(
             F.col("id").alias("node_id"),

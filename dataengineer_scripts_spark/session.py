@@ -68,9 +68,6 @@ ENGINE_CONFS: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow for every pandas interchange (Pandas UDF / toPandas).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Python DataSource filter pushdown (the REST source implements
-    # pushFilters; Spark REJECTS such readers outright when this is off).
-    "spark.sql.python.filterPushdown.enabled": "true",
     # Deterministic timestamp semantics; DuckDB oracle reads parquet as
     # naive UTC, so the session must be pinned to UTC.
     "spark.sql.session.timeZone": "UTC",

@@ -7,52 +7,38 @@ Reference behavior being re-expressed (SURVEY.md §2.1):
   ``page_size``/``page`` (``Job Cek Script/app.py:125-129``), consumed as
   a table.
 
-Spark-first design: a **Python DataSource** (Spark 4
-``pyspark.sql.datasource``) named ``rest``:
+Design:
 
-- *Partitioned read*: one input partition per API page — pages are fetched
-  by executors in parallel, not in a driver loop.  Page size mirrors the
-  reference's ``page_size=8`` default and is the source-level limit
-  knob (the reference pushes its LIMIT to the API the same way).
-- *Filter pushdown*: ``pushFilters`` translates ``type <> 'x'`` /
-  ``type = 'x'`` predicates into the API's ``type_ne``/``type_eq`` query
-  params, so filtered pages are never transferred; unsupported filters are
-  returned to Spark for post-scan evaluation (correctness never depends on
-  the source honoring them).
-- *Limit pushdown*: a ``limit`` reader option bounds the fetch to
-  ``ceil(limit / page_size)`` pages, exactly like the reference's
-  ``page_size=8&page=0`` bounded fetch (``app.py:126,162,202``).  The
-  Python DataSource API (4.1) exposes no ``pushLimit`` hook — the JVM
-  DSv2 ``SupportsPushDownLimit`` surface isn't mirrored — so the limit is
-  declared at read time (``rest_read(..., limit=8)`` sets the option AND
-  applies ``df.limit``); the planning probe's page-0 payload is embedded
-  into partition 0 so a one-page limit costs exactly ONE data fetch.
-  Safety: when a residual client-side ``type_eq`` filter is active the
-  page bound is NOT applied (truncating pre-filter pages could starve a
-  post-filter limit); Spark's own limit still guarantees the result.
-- *Auth on the driver only*: the login exchange happens once, driver-side;
-  executors receive the short-lived bearer token via the pickled reader,
-  never the credentials.
+- *Batch reads walk the pages on the driver* (:func:`rest_read`), as the
+  reference does (``sync.py:35-46``): page 0 reports the listing's
+  ``total`` and its rows are kept, then only the pages under
+  ``min(total, limit)`` are fetched, one after another, and the rows
+  become a frame through ``tables.local_frame``.  The listings are small
+  (the node listing is the 25-row ``nation`` dim, ≤ 4 pages of the
+  reference's ``page_size=8``), so Spark planning, partitions and a
+  Python worker would cost more than the GETs.  ``limit`` is the
+  reference's bounded fetch (``page_size=8&page=0``, ``app.py:126``):
+  ``ceil(limit / page_size)`` GETs, page 0 included.  Predicates are
+  Spark expressions on the returned frame.
+- *Streaming reads* go through the ``rest`` Python DataSource
+  (``spark.readStream.format("rest")``, :class:`RestStreamReader`),
+  whose poll walks the same pages with the same routine.
+- *Auth on the driver*: :func:`login` exchanges the credentials for a
+  bearer token; :func:`rest_read` is handed the token only, so an expired
+  token fails the read fast (:class:`TokenExpiredError`), while the
+  stream reader logs in again once and carries on.
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
 import urllib.request
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    EqualTo,
-    Filter,
-    InputPartition,
-    Not,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
+from ..tables import local_frame
 from .stub_api import LOGIN_PATH, PROJECTS_PATH
 
 NODE_SCHEMA = "id INT, name STRING, type STRING, status STRING, export_status STRING"
@@ -71,25 +57,24 @@ class TokenExpiredError(RuntimeError):
     mode: the token expires MID-pagination.  The two read paths pin
     different recoveries:
 
-    - **Batch reads fail fast with this error.**  Page fetches run on
-      executors, which hold only the short-lived token — never the
-      credentials — so they *cannot* re-login; retrying a deterministic
-      401 would only burn the retry budget and mask the cause.  The
-      caller re-logins (driver-side, where credentials live) and re-runs.
-    - **The streaming reader recovers automatically**: its poll loop runs
-      driver-side (``SimpleDataSourceStreamReader``), so on a 401 it
-      performs ONE re-login and replays the request; a second consecutive
-      401 propagates (that's a real auth failure, not expiry).
+    - **Batch reads fail fast with this error.**  :func:`rest_read` is
+      handed a token, never the credentials, so it *cannot* re-login;
+      retrying a deterministic 401 would only burn the retry budget and
+      mask the cause.  The caller, who holds the credentials, re-logins
+      and re-runs.
+    - **The streaming reader recovers automatically**: it polls on the
+      driver and logs in with the environment's credentials
+      (:func:`login`), so on a 401 it performs ONE re-login and replays
+      the request; a second consecutive 401 propagates (that's a real
+      auth failure, not expiry).
     """
 
 
 def _get_json(url: str, token: str) -> dict:
     """Bounded-retry GET — the one chokepoint every page/probe fetch of
-    the rest source and stream reader goes through.  A paginated read at
-    fleet scale sees transient 5xx/connection blips on SOME page fetch;
-    without per-request retry one blip kills the executor task (and in
-    local mode tasks are never re-run, so it kills the whole query).
-    Deterministic 4xx (bad token, bad path) still fails fast — retrying
+    the batch walk and the stream reader goes through.  A paginated read
+    sees transient 5xx/connection blips on SOME page fetch; without
+    per-request retry one blip kills the whole read.  Deterministic 4xx (bad token, bad path) still fails fast — retrying
     those would just mask configuration errors.  Linear backoff keeps
     the worst-case stall at 150 ms for the 3-attempt budget."""
     import http.client
@@ -151,15 +136,6 @@ def login(base_url: str, username: str | None = None, password: str | None = Non
     return token
 
 
-class RestPagePartition(InputPartition):
-    def __init__(self, page: int, rows: list | None = None):
-        self.page = page
-        #: planning-probe payload for page 0, embedded so the executor
-        #: doesn't refetch what the driver already holds (a page is ≤
-        #: page_size small dicts — cheap to pickle into the task).
-        self.rows = rows
-
-
 def _ddl_field_names(ddl: str) -> tuple[str, ...]:
     """Top-level field names of a DDL struct string.  Splits only on
     commas at bracket depth 0, so types with embedded commas/brackets
@@ -178,89 +154,33 @@ def _ddl_field_names(ddl: str) -> tuple[str, ...]:
     return tuple(names)
 
 
-class RestDataSourceReader(DataSourceReader):
-    def __init__(self, options: dict):
-        self.base_url = options["base_url"]
-        self.token = options["token"]
-        self.path = options.get("path", PROJECTS_PATH)
-        self.fields = _ddl_field_names(options.get("schema", NODE_SCHEMA))
-        self.page_size = int(options.get("page_size", DEFAULT_PAGE_SIZE))
-        self.type_ne: str | None = options.get("type_ne")
-        self.type_eq: str | None = None
-        self.limit: int | None = (
-            int(options["limit"]) if "limit" in options else None
-        )
+def _walk_pages(
+    get: Callable[[str], dict],
+    url: str,
+    page_size: int,
+    lo: int = 0,
+    hi: int | None = None,
+) -> list[dict]:
+    """Rows ``[lo, hi)`` of the paginated listing at ``url`` (``hi=None``:
+    to the end), fetched one page at a time, in order, through ``get``.
 
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        """Translate supported predicates to API query params; yield back
-        the rest for Spark to evaluate post-scan."""
-        for f in filters:
-            if (
-                isinstance(f, Not)
-                and isinstance(f.child, EqualTo)
-                and f.child.attribute == ("type",)
-            ):
-                # the API takes ONE type_ne param: consume the filter only
-                # if it agrees with (or sets) the current value — never
-                # clobber a constraint already pushed via reader option
-                val = str(f.child.value)
-                if self.type_ne is None or self.type_ne == val:
-                    self.type_ne = val
-                else:
-                    yield f
-            elif isinstance(f, EqualTo) and f.attribute == ("type",):
-                val = str(f.value)
-                if self.type_eq is None or self.type_eq == val:
-                    self.type_eq = val
-                else:
-                    yield f
-            else:
-                yield f
-
-    def _query(self, page: int) -> str:
-        params = [f"page={page}", f"page_size={self.page_size}"]
-        if self.type_ne is not None:
-            params.append(f"type_ne={self.type_ne}")
-        return f"{self.base_url}{self.path}?" + "&".join(params)
-
-    def _effective_limit(self) -> int | None:
-        # A client-side residual filter (type_eq) makes page truncation
-        # unsafe: pages dropped pre-filter could starve a post-filter
-        # limit.  type_ne is applied server-side before pagination, so it
-        # composes with the page bound.
-        return None if self.type_eq is not None else self.limit
-
-    def partitions(self) -> Sequence[RestPagePartition]:
-        # Planning fetch (driver-side): one cheap page-0 probe for the total,
-        # then one partition per page — executors fetch pages in parallel.
-        # The probe's payload rides along in partition 0, so the limit≤page
-        # case (the reference's `page_size=8&page=0` single-page fetch,
-        # app.py:126) performs exactly one data request in total.  Those
-        # page-0 rows are a planning-time snapshot: a server-side write
-        # between planning and execution shows on later pages only.
-        head = _get_json(self._query(0), self.token)
-        total = head["total"]
-        limit = self._effective_limit()
-        if limit is not None:
-            total = min(total, limit)
-        n_pages = max(1, math.ceil(total / self.page_size))
-        return [
-            RestPagePartition(p, rows=head["data"] if p == 0 else None)
-            for p in range(n_pages)
-        ]
-
-    def read(self, partition: RestPagePartition) -> Iterator[tuple]:
-        rows = partition.rows
-        if rows is None:
-            rows = _get_json(self._query(partition.page), self.token)["data"]
-        limit = self._effective_limit()
-        if limit is not None:
-            # rows remaining under the limit once earlier pages are counted
-            rows = rows[: max(0, limit - partition.page * self.page_size)]
-        for r in rows:
-            if self.type_eq is not None and r.get("type") != self.type_eq:
-                continue
-            yield tuple(r.get(k) for k in self.fields)
+    Every page reports the listing's ``total``, which caps ``hi``, so the
+    first page fetched decides how many follow and no page past the end
+    is requested: a read of ``n`` rows from 0 costs ``ceil(n/page_size)``
+    GETs, page 0 included.  A row's position is its page's base plus its
+    index in the page, so a short page shifts nothing after it.  Returns a
+    list, not a generator: Spark's simple-stream wrapper caches the
+    prefetched batch and ``copy.copy()``s its iterator on replay, which a
+    generator does not support."""
+    rows: list[dict] = []
+    page = lo // page_size
+    while hi is None or page * page_size < hi:
+        body = get(f"{url}?page={page}&page_size={page_size}")
+        hi = body["total"] if hi is None else min(hi, body["total"])
+        base = page * page_size
+        rows += body["data"][max(0, lo - base) : max(0, hi - base)]
+        page += 1
+    return rows
 
 
 class RestStreamReader(SimpleDataSourceStreamReader):
@@ -308,21 +228,9 @@ class RestStreamReader(SimpleDataSourceStreamReader):
             self.token = login(self.base_url)
             return _get_json(url, self.token)
 
-    def _page(self, page: int) -> list[dict]:
-        url = f"{self.base_url}{self.path}?page={page}&page_size={self.page_size}"
-        return self._get(url)["data"]
-
     def _fetch_range(self, lo: int, hi: int) -> list[tuple]:
-        # a LIST, not a generator: Spark's simple-stream wrapper caches the
-        # prefetched batch and copy.copy()s its iterator on replay, which a
-        # generator does not support
-        out = []
-        for page in range(lo // self.page_size, math.ceil(hi / self.page_size)):
-            base = page * self.page_size
-            for i, r in enumerate(self._page(page)):
-                if lo <= base + i < hi:
-                    out.append(tuple(r.get(k) for k in self.fields))
-        return out
+        rows = _walk_pages(self._get, self.base_url + self.path, self.page_size, lo, hi)
+        return [tuple(r.get(k) for k in self.fields) for r in rows]
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         lo = int(start["row"])
@@ -340,12 +248,11 @@ class RestStreamReader(SimpleDataSourceStreamReader):
 
 
 class RestDataSource(DataSource):
-    """``spark.read.format("rest")`` — options: base_url, token, page_size,
-    optional path (endpoint, default the projects list), schema (DDL string
-    whose field names are the JSON keys to project, default node schema),
-    limit (page-bounding fetch cap), type_ne (pre-set server-side filter).
-    ``spark.readStream.format("rest")`` polls the same endpoint
-    incrementally (see RestStreamReader)."""
+    """``spark.readStream.format("rest")`` — options: base_url, token,
+    page_size, optional path (endpoint, default the projects list) and
+    schema (DDL string whose field names are the JSON keys to project,
+    default node schema).  Polls the endpoint incrementally (see
+    RestStreamReader); batch reads are :func:`rest_read`."""
 
     @classmethod
     def name(cls) -> str:
@@ -353,9 +260,6 @@ class RestDataSource(DataSource):
 
     def schema(self) -> str:
         return self.options.get("schema", NODE_SCHEMA)
-
-    def reader(self, schema) -> RestDataSourceReader:
-        return RestDataSourceReader(self.options)
 
     def simpleStreamReader(self, schema) -> RestStreamReader:
         return RestStreamReader(self.options)
@@ -375,27 +279,21 @@ def rest_read(
     path: str | None = None,
     schema: str | None = None,
 ):
-    """The blessed read path for the ``rest`` format.  ``limit`` is pushed
-    to the source as a reader option (bounding pages fetched to
-    ``ceil(limit/page_size)``, the reference's bounded-fetch behavior at
-    ``app.py:126``) AND applied as a plan-level ``df.limit`` — the plan
-    limit guarantees the row count regardless of what the source honors,
-    the option keeps the bytes moved proportional to the limit."""
-    register_rest_source(spark)
-    reader = (
-        spark.read.format("rest")
-        .option("base_url", base_url)
-        .option("token", token)
-        .option("page_size", page_size)
+    """The listing at ``path`` (default the projects list) as a
+    driver-held frame: the pages are walked on the driver with ``token``
+    (:func:`_walk_pages`), ``limit`` rows at most — the reference's
+    bounded fetch (``app.py:126``) costs ``ceil(limit/page_size)`` GETs —
+    projected to the field names of ``schema`` (default node schema).
+    A 401 raises :class:`TokenExpiredError`."""
+    schema = schema or NODE_SCHEMA
+    rows = _walk_pages(
+        lambda url: _get_json(url, token),
+        base_url + (path or PROJECTS_PATH),
+        page_size,
+        hi=limit,
     )
-    if limit is not None:
-        reader = reader.option("limit", limit)
-    if path is not None:
-        reader = reader.option("path", path)
-    if schema is not None:
-        reader = reader.option("schema", schema)
-    df = reader.load()
-    return df.limit(limit) if limit is not None else df
+    fields = _ddl_field_names(schema)
+    return local_frame(spark, [tuple(r.get(k) for k in fields) for r in rows], schema)
 
 
 def rest_read_stream(

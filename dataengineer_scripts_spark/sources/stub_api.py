@@ -11,8 +11,7 @@ an in-process HTTP server with the same contract:
   returns 200 with the bearer token in the **Authorization response header**
   (exactly where ``sync.py:30`` reads it); else 401.
 - ``GET /analytic/projects``         — paginated node list (``page``,
-  ``page_size`` query params, reference default 8 per ``app.py:126``);
-  optional ``type_ne`` server-side filter (the pushdown target).
+  ``page_size`` query params, reference default 8 per ``app.py:126``).
   Requires ``Authorization`` header.
 - ``GET /analytic/projects/<id>``    — single project document shaped
   ``{"data": {"nodes": [...]}}`` like ``sync.py:46-51``.
@@ -253,8 +252,6 @@ class StubApi:
                 if parsed.path == PROJECTS_PATH:
                     q = parse_qs(parsed.query)
                     rows = stub.nodes
-                    if "type_ne" in q:  # server-side filter (pushdown target)
-                        rows = [r for r in rows if r["type"] != q["type_ne"][0]]
                     page = int(q.get("page", ["0"])[0])
                     size = int(q.get("page_size", ["8"])[0])
                     window = rows[page * size:(page + 1) * size]

@@ -23,8 +23,8 @@ from __future__ import annotations
 import re
 
 #: Ops whose returned plan LEGITIMATELY windows over a single partition,
-#: with the bounded input grain that makes the pattern safe at 100 TB
-#: (the window input is a fixed-size aggregate, never the fact table).
+#: with the bounded input grain that makes the pattern safe at any input
+#: size (the window input is a fixed-size aggregate, never the fact table).
 #: Values are the EXACT number of such windows the plan must contain
 #: (assert_plan_hygiene checks equality): more fails the op for growing
 #: a new global window — including one stacked directly on an existing

@@ -261,16 +261,17 @@ def test_rest_get_4xx_fails_fast(spark):
 # Token expiry MID-pagination (r19): the one failure mode of the
 # reference's module-global token (sync.py:14-32 logs in once and
 # assumes the token outlives the run).  Pinned behavior: batch reads
-# FAIL FAST with TokenExpiredError (executors hold the token, never
-# credentials — they cannot re-login, and retrying a deterministic 401
-# would just burn the budget); the driver-side streaming poll does ONE
-# re-login + replay and keeps the fresh token (see the e2e twin in
+# FAIL FAST with TokenExpiredError (rest_read is handed the token, never
+# the credentials — it cannot re-login, and retrying a deterministic 401
+# would just burn the budget); the streaming poll, which logs in with the
+# environment's credentials, does ONE re-login + replay and keeps the
+# fresh token (see the e2e twin in
 # tests/test_streaming.py::test_stream_rest_poll_survives_token_expiry).
 # ---------------------------------------------------------------------
 
 
 def test_rest_batch_token_expiry_fails_fast(spark):
-    """Token expires after 2 listing GETs of a 5-page read: the query
+    """Token expires after 2 listing GETs of a 5-page read: the read
     fails with TokenExpiredError in the chain, and the 401s are NOT
     retried — total listing traffic stays far under what a retried 401
     would produce."""
@@ -295,8 +296,9 @@ def test_rest_batch_token_expiry_fails_fast(spark):
             r for r in api.requests_seen
             if r.startswith("GET " + PROJECTS_PATH)
         ]
-        # 2 successful + ≤4 single-shot 401s (pages 1-4 minus the page-0
-        # probe payload reuse); a retried 401 would read 2 + 4*GET_RETRIES
+        # 2 successful + at most one single-shot 401 per remaining page
+        # (the walk stops at the first); a retried 401 would read
+        # 2 + 4*GET_RETRIES
         assert 3 <= len(listing_gets) <= 2 + 4 < 2 + 4 * GET_RETRIES
 
 

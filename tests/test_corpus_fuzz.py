@@ -334,7 +334,7 @@ def _adv_identical_emb(rng, sf):
 
 def _adv_nan_inf_emb(rng, sf):
     """30 clean unit vectors plus one NaN-component and one
-    Inf-component vector: corrupt embeddings a 100 TB ingest WILL carry.
+    Inf-component vector: corrupt embeddings any real ingest can carry.
     Broke 11 of 15 similarity ops before the degenerate-norm convention
     (normalize/sanitize any vector whose norm is not a positive finite
     double to the ZERO vector, identically in both engines — NaN

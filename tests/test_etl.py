@@ -1,6 +1,6 @@
 """Behavior tests for the §2.1 source/sink + §2.8 executor surface that the
-oracle-parity check can't see: auth failure, filter pushdown translation,
-bounded retry semantics, and the styled-workbook model."""
+oracle-parity check can't see: auth failure, the REST page walk's request
+counts, bounded retry semantics, and the styled-workbook model."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ from datetime import date
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import EqualTo, GreaterThan, Not
 
 from dataengineer_scripts_spark.sinks import (
     STATUS_FILLS,
@@ -20,11 +19,8 @@ from dataengineer_scripts_spark.sinks import (
     post_sync,
     write_excel_styled,
 )
-from dataengineer_scripts_spark.sources.rest import (
-    RestDataSourceReader,
-    login,
-)
-from dataengineer_scripts_spark.sources.stub_api import TOKEN, StubApi
+from dataengineer_scripts_spark.sources.rest import login, rest_read
+from dataengineer_scripts_spark.sources.stub_api import PROJECTS_PATH, TOKEN, StubApi
 
 NODES = [
     {"id": i, "name": f"n{i}", "type": "next" if i % 5 == 4 else "job",
@@ -55,82 +51,65 @@ def test_unauthenticated_get_is_401(api):
     assert ei.value.code == 401
 
 
-def test_push_filters_translates_type_ne_and_returns_rest():
-    r = RestDataSourceReader({"base_url": "http://x", "token": "t"})
-    unsupported = list(
-        r.pushFilters([Not(EqualTo(("type",), "next")), GreaterThan(("id",), 3)])
-    )
-    assert r.type_ne == "next"  # consumed → becomes the API's type_ne param
-    assert unsupported == [GreaterThan(("id",), 3)]  # handed back to Spark
-    assert "type_ne=next" in r._query(0)
+def _listing_gets(api):
+    return [r for r in api.requests_seen if r.startswith(f"GET {PROJECTS_PATH}?")]
 
 
-def test_rest_pages_partition_the_read(api):
-    r = RestDataSourceReader(
-        {"base_url": api.base_url, "token": TOKEN, "page_size": "4"}
-    )
-    parts = r.partitions()
-    assert len(parts) == 3  # 10 nodes / 4 per page
-    rows = [row for p in parts for row in r.read(p)]
-    assert sorted(r[0] for r in rows) == list(range(10))
+def test_rest_pages_partition_the_read(api, spark):
+    # 10 nodes / 4 per page: page 0 reports the total, pages 1-2 follow,
+    # and every page is fetched exactly once
+    rows = rest_read(spark, api.base_url, TOKEN, page_size=4).collect()
+    assert sorted(r.id for r in rows) == list(range(10))
+    pages = _listing_gets(api)
+    assert len(pages) == 3 and len(set(pages)) == 3
 
 
-def test_server_side_filter_reduces_transfer(api):
-    r = RestDataSourceReader(
-        {"base_url": api.base_url, "token": TOKEN, "page_size": "4"}
-    )
-    list(r.pushFilters([Not(EqualTo(("type",), "next"))]))
-    rows = [row for p in r.partitions() for row in r.read(p)]
-    assert all(row[2] != "next" for row in rows)
-    assert len(rows) == 8
-    assert any("type_ne=next" in seen for seen in api.requests_seen)
+def test_limit_pushdown_fetches_exactly_one_page(api, spark):
+    rows = rest_read(spark, api.base_url, TOKEN, page_size=4, limit=4).collect()
+    assert [r.id for r in rows] == [0, 1, 2, 3]
+    # page 0 both reports the total and carries the rows: ONE data request
+    assert len(_listing_gets(api)) == 1
 
 
-def test_limit_pushdown_fetches_exactly_one_page(api):
-    r = RestDataSourceReader(
-        {"base_url": api.base_url, "token": TOKEN, "page_size": "4", "limit": "4"}
-    )
-    parts = r.partitions()
-    assert len(parts) == 1  # ceil(4/4) of 10 total — limit bounds the plan
-    rows = [row for p in parts for row in r.read(p)]
-    assert len(rows) == 4
-    # the planning probe's payload rides in partition 0: ONE data request
-    pages = [s for s in api.requests_seen if "/analytic/projects?" in s]
-    assert len(pages) == 1
-
-
-def test_limit_pushdown_truncates_last_page(api):
-    r = RestDataSourceReader(
-        {"base_url": api.base_url, "token": TOKEN, "page_size": "4", "limit": "6"}
-    )
-    parts = r.partitions()
-    assert len(parts) == 2  # ceil(6/4)
-    rows = [row for p in parts for row in r.read(p)]
-    assert len(rows) == 6  # page 1 truncated to the 2 remaining rows
-    pages = [s for s in api.requests_seen if "/analytic/projects?" in s]
-    assert len(pages) == 2  # probe (reused as partition 0) + page 1
-
-
-def test_limit_not_applied_under_residual_client_filter(api):
-    # a client-side type_eq residual makes page truncation unsafe: the
-    # reader must ignore the limit and let Spark's plan limit decide.
-    r = RestDataSourceReader(
-        {"base_url": api.base_url, "token": TOKEN, "page_size": "4", "limit": "2"}
-    )
-    list(r.pushFilters([EqualTo(("type",), "next")]))
-    rows = [row for p in r.partitions() for row in r.read(p)]
-    assert [row[0] for row in rows] == [4, 9]  # all matches, not first-2-rows
+def test_limit_pushdown_truncates_last_page(api, spark):
+    rows = rest_read(spark, api.base_url, TOKEN, page_size=4, limit=6).collect()
+    assert [r.id for r in rows] == list(range(6))  # page 1 cut to 2 rows
+    assert len(_listing_gets(api)) == 2  # ceil(6/4): page 0 + page 1
 
 
 def test_rest_read_limit_end_to_end(api, spark):
-    from dataengineer_scripts_spark.sources.rest import rest_read
-
     df = rest_read(spark, api.base_url, TOKEN, page_size=4, limit=4)
     assert df.count() == 4
-    pages = [s for s in api.requests_seen if "/analytic/projects?" in s]
-    # planning probe reused for partition 0 → one request per job; Spark
-    # may re-plan (count triggers one job), allow probe+0 but never page 1+
-    assert all("page=0" in s for s in pages)
+    assert df.count() == 4
+    # the pages are read once, when the frame is built — counting the
+    # frame again (or re-planning it) sends nothing
+    assert _listing_gets(api) == [
+        f"GET {PROJECTS_PATH}?page=0&page_size=4"
+    ]
+
+
+def test_flagship_sync_walks_the_listing_once(spark, sf_dir, monkeypatch):
+    """One flagship_sync call reads the 25-node listing in exactly
+    ceil(25/8) = 4 page GETs, although its node frame feeds both the POST
+    fan-out and the receipts join; the bounded src_rest_limit_push read
+    costs exactly 1."""
+    from dataengineer_scripts_spark.operators import etl
+
+    monkeypatch.setattr(etl, "_SERVERS", {})
+    try:
+        assert len(etl.flagship_sync(spark, sf_dir).collect()) == 20
+        api = etl._SERVERS[("plain", sf_dir)]
+        assert len(_listing_gets(api)) == 4
+        seen = len(api.requests_seen)
+        assert len(etl.src_rest_limit_push(spark, sf_dir).collect()) == 8
+        listing = [
+            r for r in api.requests_seen[seen:]
+            if r.startswith(f"GET {PROJECTS_PATH}?")
+        ]
+        assert listing == [f"GET {PROJECTS_PATH}?page=0&page_size=8"]
+    finally:
+        for stub in etl._SERVERS.values():
+            stub.stop()
 
 
 def test_retry_short_circuits_on_success():

@@ -1,5 +1,5 @@
 """Regression tests for the round-3 hardening pass (code-review findings):
-DDL parsing, pushdown no-clobber, xlsx edge cases, label-prop convergence
+DDL parsing, the REST page walk's page 0, xlsx edge cases, label-prop convergence
 valve, broadcast reuse."""
 
 from __future__ import annotations
@@ -7,10 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from dataengineer_scripts_spark.sources.rest import (
-    RestDataSourceReader,
-    _ddl_field_names,
-)
+from dataengineer_scripts_spark.sources.rest import _ddl_field_names
 
 
 def test_ddl_field_names_handles_commas_in_types():
@@ -24,29 +21,6 @@ def test_ddl_field_names_handles_commas_in_types():
         "b",
     )
     assert _ddl_field_names("x:int, y:decimal(10,2)") == ("x", "y")
-
-
-def _mk_reader(**extra):
-    opts = {"base_url": "http://x", "token": "t"}
-    opts.update(extra)
-    return RestDataSourceReader(opts)
-
-
-def test_pushfilters_never_clobbers_option_filter():
-    from pyspark.sql.datasource import EqualTo, Not
-
-    r = _mk_reader(type_ne="next")
-    residual = list(r.pushFilters([Not(EqualTo(("type",), "legacy"))]))
-    assert r.type_ne == "next"  # option preserved
-    assert len(residual) == 1  # conflicting filter handed back to Spark
-
-    r2 = _mk_reader(type_ne="next")
-    residual2 = list(r2.pushFilters([Not(EqualTo(("type",), "next"))]))
-    assert r2.type_ne == "next" and residual2 == []  # agreeing filter consumed
-
-    r3 = _mk_reader()
-    residual3 = list(r3.pushFilters([Not(EqualTo(("type",), "legacy"))]))
-    assert r3.type_ne == "legacy" and residual3 == []
 
 
 def test_cell_xml_nan_inf_and_control_chars():
@@ -327,16 +301,21 @@ def test_stream_events_ts_is_plain_timestamp(spark, sf_dir):
     assert dict(stream_events(spark, sf_dir).dtypes)["ts"] == "timestamp"
 
 
-def test_rest_page0_rides_the_planning_probe(monkeypatch):
-    """Partition 0 carries the planning probe's rows (one request in total
-    for a single-page read); every later page fetches at read time."""
-    import dataengineer_scripts_spark.sources.rest as rest
+def test_rest_page0_rides_the_planning_probe():
+    """The walk's page-0 fetch both reports the total and supplies the
+    first page's rows: page 0 is fetched once, then each later page once."""
+    from dataengineer_scripts_spark.sources.rest import _walk_pages
 
-    head = {"total": 20, "data": [{"id": "n1", "type": "job"}]}
-    monkeypatch.setattr(rest, "_get_json", lambda url, token: head)
+    seen = []
 
-    parts = _mk_reader().partitions()
-    assert parts[0].rows == head["data"] and parts[1].rows is None
+    def get(url):
+        seen.append(url)
+        base = 8 * int(url.split("page=")[1].split("&")[0])
+        return {"total": 20, "data": [{"id": i} for i in range(base, min(20, base + 8))]}
+
+    rows = _walk_pages(get, "http://x/list", 8)
+    assert [r["id"] for r in rows] == list(range(20))
+    assert seen == [f"http://x/list?page={p}&page_size=8" for p in range(3)]
 
 
 def test_ntz_parquet_normalized_under_hostile_timezone(spark, tmp_path):

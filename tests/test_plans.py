@@ -1,4 +1,4 @@
-"""Physical-plan regression guards for the 100 TB posture: filters must
+"""Physical-plan regression guards: filters must
 reach the parquet scan, dims must broadcast, top-k must not global-sort,
 and columns must prune.  These assert on the optimized/physical plan text —
 if a refactor silently de-optimizes a plan shape, these fail before any
@@ -387,8 +387,8 @@ def test_weighted_sample_cut_is_takeordered(spark, sf_dir):
 def test_zipf_rank_is_two_level(spark, sf_dir):
     # The vocab rank must be the distributed-prefix-sum shape (range
     # shuffle + pid-partitioned row_number), NOT a single-partition
-    # window over the whole vocabulary — at 100 TB a word vocab is
-    # 10^7-10^8 rows through one task (the r09 verdict's weak item).
+    # window over the whole vocabulary, which would put every distinct
+    # word of a large corpus through one task.
     # Assert on the PRE-barrier stage; the operator checkpoints it.
     from dataengineer_scripts_spark.operators.relevance import _zipf_numbered
 

@@ -1208,16 +1208,17 @@ def test_rest_stream_completes_under_any_token_expiry(
 )
 @settings(max_examples=15, deadline=None)
 def test_rest_batch_token_expiry_is_all_or_error(n_nodes, page_size, budget):
-    """Safety under token expiry (r19): a batch read driven through the
-    reader's own partition/read protocol either delivers EVERY row or
-    raises TokenExpiredError — never a silent truncation that could be
-    mistaken for a complete result."""
+    """Safety under token expiry (r19): the page walk that rest_read runs
+    (token only, no credentials) either delivers EVERY row or raises
+    TokenExpiredError — never a silent truncation that could be mistaken
+    for a complete result."""
     from dataengineer_scripts_spark.sources.rest import (
-        RestDataSourceReader,
         TokenExpiredError,
+        _get_json,
+        _walk_pages,
         login,
     )
-    from dataengineer_scripts_spark.sources.stub_api import StubApi
+    from dataengineer_scripts_spark.sources.stub_api import PROJECTS_PATH, StubApi
 
     nodes = [
         {"id": i, "name": f"n{i}", "type": "job", "status": "S",
@@ -1225,20 +1226,16 @@ def test_rest_batch_token_expiry_is_all_or_error(n_nodes, page_size, budget):
         for i in range(n_nodes)
     ]
     with StubApi(nodes, expire_token_after=budget) as api:
-        reader = RestDataSourceReader(
-            {
-                "base_url": api.base_url,
-                "token": login(api.base_url),
-                "page_size": str(page_size),
-            }
-        )
+        token = login(api.base_url)
         try:
-            rows = [
-                r for p in reader.partitions() for r in reader.read(p)
-            ]
+            rows = _walk_pages(
+                lambda url: _get_json(url, token),
+                api.base_url + PROJECTS_PATH,
+                page_size,
+            )
         except TokenExpiredError:
             return  # fail-fast leg: acceptable, and loud
-        assert [r[0] for r in rows] == list(range(n_nodes))
+        assert [r["id"] for r in rows] == list(range(n_nodes))
 
 
 @st.composite

@@ -25,7 +25,7 @@ to the events-analytics stack — windows, sessionize, retention, funnel,
 as-of joins, time series.  First blood: the broad batch's maiden run
 caught a real DIVIDE_BY_ZERO in ``x_agg_regression_stats`` on a
 degenerate (constant-x) random segment — a shape the fixtures cannot
-produce but a 100 TB warehouse certainly will.
+produce but a real warehouse can.
 """
 
 from __future__ import annotations
